@@ -10,6 +10,24 @@ cluster:
 * RocksDB state store for streaming state (dedup / agg state at scale;
   the reference's unbounded `dropDuplicates` state would OOM the default
   HDFS-backed in-memory store).
+* Checkpoint and sink-log writes through the Hadoop ``FileSystem`` API
+  (``FileSystemBasedCheckpointFileManager``) instead of Spark's default
+  ``FileContext`` manager. Every streaming query's offset and commit
+  logs, every file sink's ``_spark_metadata`` log and the RocksDB
+  state-store checkpoint files go through this manager, so its rename is
+  a fixed cost on every trigger of every medallion stage.
+  ``FileContext.rename`` checks each path for a symlink, and Hadoop's
+  ``RawLocalFileSystem`` answers that check by spawning a ``readlink``
+  process when libhadoop is not loaded — hundreds of process starts per
+  second for the always-on cascade. The swap keeps the log's
+  guarantees: a write still goes temp file -> rename, ``rename(2)`` is
+  atomic on POSIX and on HDFS, and the manager still refuses to replace
+  an existing batch file, so Spark's "Concurrent update to the log"
+  guard holds. ``FileContext``'s own no-overwrite rename on the local
+  filesystem is check-then-rename too, so no guarantee is lost. The
+  precondition is the one the log always had: one writer per checkpoint
+  and a filesystem with atomic rename. Object stores lack the latter;
+  there the Delta log (which keeps its own log store) replaces it.
 * UTC session timezone so TIMESTAMP semantics match the DuckDB oracle.
 * `nanosAsLong` because the driver's `events.parquet` carries
   TIMESTAMP(NANOS), which Spark has no native type for; `tables.py`
@@ -46,24 +64,12 @@ def _default_driver_mem() -> str:
         return "4g"
 
 
-def get_spark(
-    app_name: str = "databricks-end-to-end-streaming-spark",
-    master: str | None = None,
+def session_conf(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
-    """Build (or reuse) a SparkSession configured for this engine.
-
-    On a real cluster ``master`` comes from spark-submit; locally we
-    default to ``local[$SPARK_GRAFT_CPUS]``.
-    """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = SparkSession.builder.appName(app_name)
-    if master is None and "SPARK_MASTER" not in os.environ:
-        master = f"local[{cpus}]"
-    if master:
-        builder = builder.master(master)
-
+) -> dict[str, str]:
+    """The Spark settings ``get_spark`` applies: the engine's defaults,
+    each overridable by ``extra_conf``."""
     n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     conf = {
         # Local mode launches the driver JVM with Spark's 1g default
@@ -89,6 +95,12 @@ def get_spark(
         "spark.sql.streaming.stateStore.providerClass": (
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
         ),
+        # Offset/commit logs, sink metadata logs and state checkpoints:
+        # FileSystem.rename, not FileContext.rename (module docstring).
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
+        ),
         # Arrow for pandas-UDF boundaries (the only place rows leave the JVM).
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # Driver testdata ships TIMESTAMP(NANOS) parquet (events.ts).
@@ -98,6 +110,26 @@ def get_spark(
     }
     if extra_conf:
         conf.update(extra_conf)
-    for k, v in conf.items():
+    return conf
+
+
+def get_spark(
+    app_name: str = "databricks-end-to-end-streaming-spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> SparkSession:
+    """Build (or reuse) a SparkSession configured for this engine.
+
+    On a real cluster ``master`` comes from spark-submit; locally we
+    default to ``local[$SPARK_GRAFT_CPUS]``.
+    """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    builder = SparkSession.builder.appName(app_name)
+    if master is None and "SPARK_MASTER" not in os.environ:
+        master = f"local[{cpus}]"
+    if master:
+        builder = builder.master(master)
+    for k, v in session_conf(shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

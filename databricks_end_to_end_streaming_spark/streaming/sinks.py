@@ -189,29 +189,31 @@ class ParquetTable:
         writers) — a post-crash append/overwrite would otherwise
         recreate the live dir itself and permanently strand the
         pre-crash data in ._old as a silent fresh start. Covers the
-        table root (upsert/compact) and partition dirs inside it
-        (partition-scoped compact)."""
+        table root (upsert/compact) and the first partition column's
+        dirs (partition-scoped compact, the only writer of in-table
+        asides). The check lists at most the root, never the whole tree:
+        a token-partitioned table grows a directory per batch, and this
+        runs on every access."""
         old = self.path.rstrip("/") + "._old"
         if not os.path.isdir(self.path) and os.path.isdir(old):
             os.rename(old, self.path)
-        if not os.path.isdir(self.path):
+        if not self.partition_by or not os.path.isdir(self.path):
             return
-        for root, dirs, _files in os.walk(self.path):
-            for d in list(dirs):
-                if d.endswith("._old"):
-                    live = os.path.join(root, d[: -len("._old")])
-                    aside = os.path.join(root, d)
-                    if not os.path.isdir(live):
-                        # crashed between rename-aside and rename-in:
-                        # the aside copy is the table — restore it
-                        os.rename(aside, live)
-                    else:
-                        # crashed after the new dir landed: the aside is
-                        # a stale duplicate INSIDE the table tree, which
-                        # partition discovery would read as a bogus
-                        # partition value — drop it
-                        shutil.rmtree(aside)
-                    dirs.remove(d)
+        for d in os.listdir(self.path):
+            aside = os.path.join(self.path, d)
+            if not (d.endswith("._old") and os.path.isdir(aside)):
+                continue
+            live = aside[: -len("._old")]
+            if not os.path.isdir(live):
+                # crashed between rename-aside and rename-in:
+                # the aside copy is the partition — restore it
+                os.rename(aside, live)
+            else:
+                # crashed after the new dir landed: the aside is
+                # a stale duplicate INSIDE the table tree, which
+                # partition discovery would read as a bogus
+                # partition value — drop it
+                shutil.rmtree(aside)
 
     def exists(self) -> bool:
         self._recover_swap()

@@ -163,6 +163,35 @@ def test_partition_swap_crash_windows_heal(spark, workdir):
     assert not os.path.isdir(pdir + "._old")
 
 
+def test_unpartitioned_token_tree_heals_root_swap_without_tree_walk(
+    spark, workdir, monkeypatch
+):
+    """An unpartitioned, token-keyed table (the raw layout: one
+    batchid=N/schemaid=M dir per batch and schema) still heals a crash
+    in the root swap window, and the heal never walks the token tree —
+    it runs on every access, and the tree grows with every trigger."""
+    import os
+
+    t = ParquetTable(f"{workdir}/tok")
+    for b in range(3):
+        for s in (1, 2):
+            t.idempotent_append(
+                spark.createDataFrame([(b * 10 + s,)], "id int"),
+                f"batchid={b}/schemaid={s}",
+            )
+    ids = sorted(r["id"] for r in t.read(spark).collect())
+    os.rename(t.path, t.path + "._old")  # crashed between swap renames
+
+    def no_walk(*_a, **_k):
+        raise AssertionError("_recover_swap walked the table tree")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "walk", no_walk)
+        t._recover_swap()
+    assert os.path.isdir(t.path) and not os.path.isdir(t.path + "._old")
+    assert sorted(r["id"] for r in t.read(spark).collect()) == ids
+
+
 def test_vacuum_cleans_partition_staging_leftovers(spark, workdir):
     import os
 
