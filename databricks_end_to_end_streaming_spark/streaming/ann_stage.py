@@ -44,9 +44,8 @@ def ann_index_stage(table: ParquetTable, vec_col: str = "embedding"):
             )
             .select("vec_id", vec_col, F.explode("probes").alias("p"))
             .select("vec_id", vec_col, "p.table_id", "p.bucket")
-            .withColumn("_batch_id", F.lit(batch_id))
         )
-        table.idempotent_append(part, f"batchid={batch_id}/role=annindex")
+        table.append_batch(part, batch_id, "annindex")
 
     return stage
 
@@ -61,9 +60,7 @@ def ann_topk_from_index(
     """(query_id, neighbor_id, rank, score) against the accumulated
     index — the batch operator's exact answer over the indexed corpus
     as of ``up_to_batch``."""
-    index = table.read(spark)
-    if up_to_batch is not None:
-        index = index.where(F.col("_batch_id") <= up_to_batch)
+    index = table.read(spark, up_to_batch=up_to_batch)
     # a replayed/duplicated index row must not double a candidate: the
     # probe join is followed by the same distinct the batch op applies
     probes = (

@@ -29,12 +29,8 @@ def lang_count_stage(table: ParquetTable):
     under the replay token."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        partial = (
-            batch_df.groupBy("lang")
-            .agg(F.count("*").alias("n_docs"))
-            .withColumn("_batch_id", F.lit(batch_id))
-        )
-        table.idempotent_append(partial, f"batchid={batch_id}/role=langcount")
+        partial = batch_df.groupBy("lang").agg(F.count("*").alias("n_docs"))
+        table.append_batch(partial, batch_id, "langcount")
 
     return stage
 
@@ -47,8 +43,6 @@ def apportionment_from_log(
     """The batch query's exact apportionment, folded from the
     lang-count log (the as-of view at ``up_to_batch`` is the mix plan
     as it stood after that batch)."""
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read(spark, up_to_batch=up_to_batch)
     g = log.groupBy("lang").agg(F.sum("n_docs").alias("n_docs"))
     return apportion_over_counts(pin(g))

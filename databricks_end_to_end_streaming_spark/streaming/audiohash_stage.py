@@ -6,7 +6,7 @@ energy-delta fingerprint (operators/audiohash.py).
 The per-batch partial is the batch's own (media_id, audiohash) rows —
 hashing is a pure per-row function of the payload, so the signature LOG
 is slicing- and order-insensitive by construction and replay safety
-comes from the token'd ``idempotent_append`` protocol. The read side
+comes from ``ParquetTable.append_batch``. The read side
 runs the SAME banded Hamming pairing the batch query uses over the
 folded log, so a drained stream reproduces the batch pair list
 bit-for-bit; ``audio_pairs_with_batch`` probes only the new batch's
@@ -34,10 +34,7 @@ def audiohash_stage(sig_table: ParquetTable):
     append the signatures (1 long per clip)."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        sig_table.idempotent_append(
-            audio_hashes(batch_df).withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=audiohash",
-        )
+        sig_table.append_batch(audio_hashes(batch_df), batch_id, "audiohash")
 
     return stage
 
@@ -51,9 +48,7 @@ def audio_pairs_from_log(
     """Banded Hamming pairing over the folded signature log — the batch
     query's exact semantics (``up_to_batch`` gives the prequential
     as-of view)."""
-    log = sig_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = sig_table.read(spark, up_to_batch=up_to_batch)
     return (
         hamming_neardup_pairs(
             log.select("media_id", "audiohash").dropDuplicates(["media_id"]),
@@ -78,8 +73,7 @@ def audio_pairs_with_batch(
     ``batch_id`` — the batch's band rows join directly against the log's
     chunk index, so history-vs-history candidates are never generated."""
     log = (
-        sig_table.read(spark)
-        .where(F.col("_batch_id") <= batch_id)
+        sig_table.read(spark, up_to_batch=batch_id)
         .select("media_id", "audiohash")
         .dropDuplicates(["media_id"])
     )

@@ -42,7 +42,8 @@ from ..operators.bloom import (
     bloom_probe_flag,
 )
 from ..pin import pin
-from .sinks import ParquetTable, batch_id_col, exclude_batch
+from .medallion import drain, foreach_writer
+from .sinks import ParquetTable, batch_id_col, batch_token, exclude_batch
 
 BLOOM_M_BITS = 1 << 20
 
@@ -174,12 +175,9 @@ def bloom_dedup_batch(
             lambda d: pin(d, require_frozen=True, site="bloom.new_docs")
         )
         out_table.idempotent_append(
-            new_docs.drop("fp"), f"batchid={batch_id}/role=docs"
+            new_docs.drop("fp"), batch_token(batch_id, "docs")
         )
-        fp_table.idempotent_append(
-            new_docs.select("fp").withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=fp",
-        )
+        fp_table.append_batch(new_docs.select("fp"), batch_id, "fp")
         batch_words = bloom_build(batch, "fp", m_bits)
         merged = (
             bloom_merge(bitmap, batch_words) if bitmap is not None else batch_words
@@ -227,15 +225,7 @@ def bloom_dedup_stage(
             fingerprint=fingerprint,
         )
 
-    (
-        source.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(foreach_writer(source, process, checkpoint, query_name))
 
 
 def url_fingerprint(url_col: str = "url") -> F.Column:

@@ -32,7 +32,8 @@ from ..queries.text import (
     bm25_doc_features,
     bm25_score_from,
 )
-from .sinks import ParquetTable
+from .medallion import drain, foreach_writer
+from .sinks import LOG_COLUMNS, ParquetTable
 
 
 def bm25_stage(features_table: ParquetTable, stats_table: ParquetTable):
@@ -43,14 +44,8 @@ def bm25_stage(features_table: ParquetTable, stats_table: ParquetTable):
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
         base = bm25_doc_features(batch_df)
-        features_table.idempotent_append(
-            base.withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=features",
-        )
-        stats_table.idempotent_append(
-            bm25_corpus_stats(base).withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=stats",
-        )
+        features_table.append_batch(base, batch_id, "features")
+        stats_table.append_batch(bm25_corpus_stats(base), batch_id, "stats")
 
     return stage
 
@@ -67,23 +62,13 @@ def bm25_topk_from_log(
     batches <= that id contribute (prequential view); ``top_k`` widens
     the cut for downstream consumers (the hybrid-RRF lexical leg served
     from this log)."""
-    feats = features_table.read(spark)
-    stats_log = stats_table.read(spark)
-    if up_to_batch is not None:
-        feats = feats.where(F.col("_batch_id") <= up_to_batch)
-        stats_log = stats_log.where(F.col("_batch_id") <= up_to_batch)
-    # fold only the monoid columns: _-prefixed bookkeeping and the
-    # token-dir partition columns (batchid/role, parquet mode only) are
-    # not statistics
-    sum_cols = [
-        c
-        for c in stats_log.columns
-        if not c.startswith("_") and c not in ("batchid", "role")
-    ]
+    feats = features_table.read(spark, up_to_batch=up_to_batch)
+    stats_log = stats_table.read(spark, up_to_batch=up_to_batch)
+    # fold only the monoid columns: the log's bookkeeping columns
+    # (_batch_id and the parquet-mode token dirs) are not statistics
+    sum_cols = stats_log.drop(*LOG_COLUMNS).columns
     stats = stats_log.groupBy().agg(*[F.sum(c).alias(c) for c in sum_cols])
-    base = feats.select(
-        *[c for c in feats.columns if not c.startswith("_") and c not in ("batchid", "role")]
-    )
+    base = feats.drop(*LOG_COLUMNS)
     if top_k is None:
         top_k = BM25_TOP_K
     return bm25_score_from(base, stats, top_k=top_k)
@@ -98,14 +83,5 @@ def bm25_index_stage(
 ) -> None:
     """Streaming wrapper: drain available document batches into the
     incremental BM25 index (Trigger-Once semantics, SURVEY T1)."""
-    (
-        source.writeStream.foreachBatch(
-            bm25_stage(features_table, stats_table)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    body = bm25_stage(features_table, stats_table)
+    drain(foreach_writer(source, body, checkpoint, query_name))

@@ -21,6 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..queries.text import boilerplate_elect, boilerplate_prefix_counts
+from .medallion import drain, foreach_writer
 from .sinks import ParquetTable
 
 
@@ -29,11 +30,8 @@ def boilerplate_stage(counts_table: ParquetTable):
     (source, prefix) count partial under the replay token."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        counts_table.idempotent_append(
-            boilerplate_prefix_counts(batch_df).withColumn(
-                "_batch_id", F.lit(batch_id)
-            ),
-            f"batchid={batch_id}/role=prefixes",
+        counts_table.append_batch(
+            boilerplate_prefix_counts(batch_df), batch_id, "prefixes"
         )
 
     return stage
@@ -48,9 +46,7 @@ def boilerplate_from_log(
     shared election core, so drained == batch bit-for-bit. With
     ``up_to_batch`` only batches <= that id contribute (the drift
     trajectory view)."""
-    log = counts_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = counts_table.read(spark, up_to_batch=up_to_batch)
     folded = log.groupBy("source", "prefix").agg(
         F.sum("n_docs_with_prefix").alias("n_docs_with_prefix")
     )
@@ -65,12 +61,5 @@ def boilerplate_monitor_stage(
 ) -> None:
     """Streaming wrapper: drain available document batches into the
     prefix-count log (Trigger-Once semantics, SURVEY T1)."""
-    (
-        source.writeStream.foreachBatch(boilerplate_stage(counts_table))
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    body = boilerplate_stage(counts_table)
+    drain(foreach_writer(source, body, checkpoint, query_name))

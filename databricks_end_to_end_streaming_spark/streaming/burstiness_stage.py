@@ -37,11 +37,14 @@ def burstiness_stage(table: ParquetTable):
             F.sum("c").alias("total"),
             F.sum(F.col("c") * F.col("c")).alias("ssq"),
         )
-        table.idempotent_append(
+        # both roles store _batch_id ahead of _n_docs: the stamp here
+        # holds its column slot, and append_batch re-stamps it in place
+        table.append_batch(
             partials.withColumn("_batch_id", F.lit(batch_id)).withColumn(
                 "_n_docs", F.lit(None).cast("long")
             ),
-            f"batchid={batch_id}/role=moments",
+            batch_id,
+            "moments",
         )
         n = batch_df.agg(F.count("*").alias("_n_docs")).select(
             F.lit(None).cast("string").alias("w"),
@@ -51,7 +54,7 @@ def burstiness_stage(table: ParquetTable):
             F.lit(batch_id).alias("_batch_id"),
             "_n_docs",
         )
-        table.idempotent_append(n, f"batchid={batch_id}/role=ndocs")
+        table.append_batch(n, batch_id, "ndocs")
 
     return stage
 
@@ -63,9 +66,7 @@ def burstiness_from_log(
 ) -> DataFrame:
     """Batch-identical top-k burstiness over the folded moment log
     (prequential with ``up_to_batch``)."""
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read(spark, up_to_batch=up_to_batch)
     mom = (
         log.where(F.col("w").isNotNull())
         .groupBy("w")

@@ -6,8 +6,8 @@ The per-batch partial is the batch's own training sufficient statistics
 (n0, n1), all exact int64 SUM monoids — so the fold is insensitive to
 batch slicing and merge order, and a drained stream reproduces the
 batch-trained weights bit-for-bit (the weights are a fixed IEEE chain
-over the folded integers). Replay safety comes from the uniform token'd
-``idempotent_append`` protocol.
+over the folded integers). Replay safety comes from
+``ParquetTable.append_batch``.
 
 Both row kinds live in one log relation: stats rows carry bucket >= 0
 with n0 = n1 = 0; the class-size row carries bucket = -1 with
@@ -64,10 +64,7 @@ def classifier_stage(stats_table: ParquetTable):
     partials (<= dim + 1 rows)."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        stats_table.idempotent_append(
-            _batch_partial(batch_df).withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=clsstats",
-        )
+        stats_table.append_batch(_batch_partial(batch_df), batch_id, "clsstats")
 
     return stage
 
@@ -81,9 +78,7 @@ def classifier_weights_from_log(
     relation (bucket, s0, s1, w) — bit-for-bit the batch query's output
     on the same data. ``up_to_batch`` gives the prequential as-of
     view."""
-    log = stats_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = stats_table.read(spark, up_to_batch=up_to_batch)
     folded = log.groupBy("bucket").agg(
         F.sum("s0").cast("long").alias("s0"),
         F.sum("s1").cast("long").alias("s1"),

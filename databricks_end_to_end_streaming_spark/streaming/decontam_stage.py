@@ -7,8 +7,8 @@ incremental form is embarrassingly per-batch: each micro-batch runs the
 union suffix array of ITS OWN docs against the standing benchmark set
 and appends one accounting row per doc. The log therefore equals the
 batch query's output over the union of batches row-for-row (the pytest
-asserts it), replay safety comes from the token'd ``idempotent_append``
-protocol, and there is no cross-batch state at all — the benchmark's
+asserts it), replay safety comes from ``ParquetTable.append_batch``,
+and there is no cross-batch state at all — the benchmark's
 rank list is recomputed per batch against the batch's suffix array
 (ranks are relative to the union, so they cannot be cached across
 batches; the benchmark TEXT relation is the reusable input).
@@ -26,7 +26,6 @@ the benchmark re-ranking amortizes over more new documents.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..queries.dedup import decontam_accounting
@@ -38,11 +37,8 @@ def decontam_stage(acc_table: ParquetTable, bench: DataFrame):
     standing benchmark and append the per-doc accounting."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        acc_table.idempotent_append(
-            decontam_accounting(batch_df, bench).withColumn(
-                "_batch_id", F.lit(batch_id)
-            ),
-            f"batchid={batch_id}/role=decontam",
+        acc_table.append_batch(
+            decontam_accounting(batch_df, bench), batch_id, "decontam"
         )
 
     return stage

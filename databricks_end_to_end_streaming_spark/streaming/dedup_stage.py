@@ -30,7 +30,8 @@ from ..queries.dedup import (
     verify_jaccard,
 )
 from ..pin import pin
-from .sinks import ParquetTable, exclude_batch
+from .medallion import drain, foreach_writer
+from .sinks import LOG_COLUMNS, ParquetTable, exclude_batch
 
 
 def neardup_batch(
@@ -49,14 +50,14 @@ def neardup_batch(
     batch_df.persist()
     try:
         sigs = minhash_signatures(batch_df)
-        new_bands = band_rows(sigs).withColumn("_batch_id", F.lit(batch_id))
+        new_bands = band_rows(sigs)
 
         # new-vs-new candidates inside the batch
         cand = lsh_candidate_pairs(sigs)
         # new-vs-seen candidates against the accumulated index (strictly
         # older batches only: replay-safe, see module docstring)
         if bands_table.exists():
-            seen = bands_table.read(spark).where(F.col("_batch_id") < batch_id)
+            seen = bands_table.read(spark, up_to_batch=batch_id - 1)
             # Broadcast the BATCH side: the accumulated index is the big
             # relation (8 rows per corpus doc) and must stream through a
             # map-side hash join — shuffling the index per micro-batch
@@ -95,25 +96,18 @@ def neardup_batch(
         if docs_table.exists():
             hist = docs_table.read(spark)
             prior = exclude_batch(hist, batch_id, docs_table.path)
-            corpus = prior.drop("batchid", "role", "_batch_id").unionByName(
+            corpus = prior.drop(*LOG_COLUMNS).unionByName(
                 batch_df, allowMissingColumns=True
             )
         else:
             corpus = batch_df
-        pairs = (
-            verify_jaccard(cand, corpus)
-            .where(F.col("jaccard") >= threshold)
-            .withColumn("_batch_id", F.lit(batch_id))
-        )
+        pairs = verify_jaccard(cand, corpus).where(F.col("jaccard") >= threshold)
 
-        pairs_table.idempotent_append(pairs, f"batchid={batch_id}/role=pairs")
-        bands_table.idempotent_append(new_bands, f"batchid={batch_id}/role=bands")
+        pairs_table.append_batch(pairs, batch_id, "pairs")
+        bands_table.append_batch(new_bands, batch_id, "bands")
         # docs carry an explicit _batch_id so the replay exclusion above
         # works in Delta mode too (no token partition dirs there)
-        docs_table.idempotent_append(
-            batch_df.withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=docs",
-        )
+        docs_table.append_batch(batch_df, batch_id, "docs")
     finally:
         batch_df.unpersist()
 
@@ -135,12 +129,4 @@ def neardup_stage(
             batch_df, docs_table, bands_table, pairs_table, batch_id, threshold
         )
 
-    (
-        source.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(foreach_writer(source, process, checkpoint, query_name))

@@ -40,11 +40,8 @@ def dictscan_stage(table: ParquetTable, terms: tuple[str, ...] = DICT_TERMS):
                 F.count("*").alias("n_docs"),
                 F.sum("hits").alias("n_hits"),
             )
-            .withColumn("_batch_id", F.lit(batch_id))
         )
-        table.idempotent_append(
-            partial, f"batchid={batch_id}/role=dictscan"
-        )
+        table.append_batch(partial, batch_id, "dictscan")
 
     return stage
 
@@ -58,9 +55,7 @@ def dictscan_report_from_log(
     """(term, n_docs, n_hits) — the batch query's exact output, folded
     from the partial log with zero-hit terms restored from the term
     dim."""
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read(spark, up_to_batch=up_to_batch)
     agg = log.groupBy("term").agg(
         F.sum("n_docs").alias("n_docs"), F.sum("n_hits").alias("n_hits")
     )

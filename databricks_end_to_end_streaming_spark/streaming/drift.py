@@ -40,9 +40,8 @@ def contingency_stage(table: ParquetTable, key: str, bin_expr: Column):
             )
             .groupBy("key", "bin_lo")
             .agg(F.count("*").alias("o"))
-            .withColumn("_batch_id", F.lit(batch_id))
         )
-        table.idempotent_append(partials, f"batchid={batch_id}/role=contingency")
+        table.append_batch(partials, batch_id, "contingency")
 
     return stage
 
@@ -52,9 +51,7 @@ def summed_contingency(
 ) -> DataFrame:
     """Merge the partial log to one (key, bin_lo, o) per cell; with
     ``up_to_batch``, only batches <= that id contribute."""
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read(spark, up_to_batch=up_to_batch)
     return log.groupBy("key", "bin_lo").agg(F.sum("o").alias("o"))
 
 
@@ -89,9 +86,7 @@ def psi_drift(
     as-of view, alarm on the drift_class column."""
     from ..queries.analytics import psi_from_counts
 
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read(spark, up_to_batch=up_to_batch)
     base = (
         log.where(F.col("_batch_id") <= reference_batch)
         .groupBy("key", "bin_lo")

@@ -13,10 +13,10 @@ introduce state)."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.encoding import MOJIBAKE_HINTS, fix_mojibake_col, mojibake_marker_count
+from .medallion import drain, foreach_writer
 from .sinks import ParquetTable
 
 
@@ -32,12 +32,12 @@ def encoding_repair_stage(out_table: ParquetTable):
                 "markers_before"
             ),
         ).withColumn("text", fix_mojibake_col("text"))
-        out_table.idempotent_append(
+        out_table.append_batch(
             repaired.withColumn(
-                "markers_after",
-                mojibake_marker_count("text", MOJIBAKE_HINTS),
-            ).withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=repaired",
+                "markers_after", mojibake_marker_count("text", MOJIBAKE_HINTS)
+            ),
+            batch_id,
+            "repaired",
         )
 
     return stage
@@ -50,9 +50,7 @@ def repaired_from_log(
 ) -> DataFrame:
     """The accumulated repaired corpus (prequential with
     ``up_to_batch``)."""
-    df = out_table.read(spark)
-    if up_to_batch is not None:
-        df = df.where(F.col("_batch_id") <= up_to_batch)
+    df = out_table.read(spark, up_to_batch=up_to_batch)
     return df
 
 
@@ -64,12 +62,5 @@ def encoding_repair_index_stage(
 ) -> None:
     """Streaming wrapper: drain available batches through the repair
     stage (Trigger-Once semantics, SURVEY T1)."""
-    (
-        source.writeStream.foreachBatch(encoding_repair_stage(out_table))
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    body = encoding_repair_stage(out_table)
+    drain(foreach_writer(source, body, checkpoint, query_name))

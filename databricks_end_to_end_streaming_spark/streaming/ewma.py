@@ -46,9 +46,8 @@ def current_ewma(
     """Latest (key, ewma, n_events) per key; with ``before_batch``,
     latest STRICTLY BEFORE that batch id (the replay-safe prior-state
     view batch N folds from)."""
-    log = state_table.read(spark)
-    if before_batch is not None:
-        log = log.where(F.col("_batch_id") < before_batch)
+    up_to = None if before_batch is None else before_batch - 1
+    log = state_table.read(spark, up_to_batch=up_to)
     w = Window.partitionBy("key").orderBy(F.desc("_batch_id"))
     return (
         log.withColumn("_rn", F.row_number().over(w))
@@ -116,8 +115,7 @@ def ewma_stage(
             (F.coalesce(F.col("_prior_n"), F.lit(0)) + F.col("_batch_n")).alias(
                 "n_events"
             ),
-            F.lit(batch_id).alias("_batch_id"),
         )
-        state_table.idempotent_append(out, f"batchid={batch_id}/role=ewma")
+        state_table.append_batch(out, batch_id, "ewma")
 
     return stage

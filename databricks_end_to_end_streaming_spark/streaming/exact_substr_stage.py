@@ -33,7 +33,7 @@ Per micro-batch (``exact_substr_batch``):
 * every occurrence of a verified duplicated window — in the batch AND
   retroactively in older documents (all copies are cut: the released
   ExactSubstr policy) — appends a cut row (doc_id, off) under the
-  token'd ``idempotent_append`` replay protocol;
+  ``ParquetTable.append_batch`` replay protocol;
 * the batch's (doc_id, off, h) window fingerprints join the index.
 
 The product is the FOLD VIEW ``cleaned_from_log``: per ingested doc,
@@ -71,6 +71,7 @@ from ..operators.suffix import (
     window_expr,
 )
 from ..pin import pin
+from .medallion import drain, foreach_writer
 from .sinks import ParquetTable, exclude_batch
 
 DEFAULT_MIN_LEN = 8
@@ -156,26 +157,19 @@ def exact_substr_batch(
                 "left_anti",
             )
 
-        cuts_table.idempotent_append(
+        cuts_table.append_batch(
             # min_len rides on every cut row so the FOLD is
             # self-describing: cleaned_from_log derives span_end from
             # the logged width instead of trusting a second call site
             # to repeat the stage's configuration
-            covered.withColumn("min_len", F.lit(min_len)).withColumn(
-                "_batch_id", F.lit(batch_id)
-            ),
-            f"batchid={batch_id}/role=cuts",
+            covered.withColumn("min_len", F.lit(min_len)),
+            batch_id,
+            "cuts",
         )
-        gram_table.idempotent_append(
-            new_occ.select("doc_id", "off", "h").withColumn(
-                "_batch_id", F.lit(batch_id)
-            ),
-            f"batchid={batch_id}/role=grams",
+        gram_table.append_batch(
+            new_occ.select("doc_id", "off", "h"), batch_id, "grams"
         )
-        docs_table.idempotent_append(
-            batch_df.withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=docs",
-        )
+        docs_table.append_batch(batch_df, batch_id, "docs")
     finally:
         batch_df.unpersist()
 
@@ -231,12 +225,4 @@ def exact_substr_stage(
             batch_df, docs_table, gram_table, cuts_table, batch_id, min_len
         )
 
-    (
-        source.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(foreach_writer(source, process, checkpoint, query_name))

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..queries.fuzzy import FUZZY_MAX_DIST
 from ..pin import pin
+from .medallion import drain, foreach_writer
 from .sinks import ParquetTable
 
 
@@ -87,8 +88,7 @@ def fuzzy_batch(
     # append-by-count), so pairs where the "seen" name equals a batch
     # name are harmless duplicates the distinct() collapses.
     if index_table.exists():
-        idx = index_table.read(spark)
-        seen = idx.where(F.col("_batch_id") < batch_id)
+        seen = index_table.read(spark, up_to_batch=batch_id - 1)
         cross = (
             F.broadcast(new_tok.alias("n"))
             .join(
@@ -104,20 +104,9 @@ def fuzzy_batch(
         cand = cand.union(cross)
     cand = cand.distinct().transform(pin)
 
-    matches = _verified(cand, max_dist).withColumn(
-        "_batch_id", F.lit(batch_id)
-    )
-    matches_table.idempotent_append(
-        matches, f"batchid={batch_id}/role=matches"
-    )
-    index_table.idempotent_append(
-        new_tok.withColumn("_batch_id", F.lit(batch_id)),
-        f"batchid={batch_id}/role=tok",
-    )
-    names_table.idempotent_append(
-        batch_names.withColumn("_batch_id", F.lit(batch_id)),
-        f"batchid={batch_id}/role=names",
-    )
+    matches_table.append_batch(_verified(cand, max_dist), batch_id, "matches")
+    index_table.append_batch(new_tok, batch_id, "tok")
+    names_table.append_batch(batch_names, batch_id, "names")
 
 
 def fuzzy_matches_from_log(
@@ -207,12 +196,4 @@ def fuzzy_er_stage(
             max_dist,
         )
 
-    (
-        source.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(foreach_writer(source, process, checkpoint, query_name))

@@ -3,9 +3,8 @@
 
 The per-batch partial is the batch's own (day, hour, bin, cnt) counts —
 a SUM monoid (associative + commutative), so the fold is insensitive to
-batch slicing and merge order; replay safety comes from the uniform
-token'd ``idempotent_append`` protocol (one partial per batch id, a
-replayed batch overwrites its own directory instead of double-counting).
+batch slicing and merge order; replay safety comes from
+``ParquetTable.append_batch`` (one partial per batch id).
 The read side merges the log through the SAME report core the batch
 query uses (``hist_quantile_report``), so a drained stream reproduces
 the batch p50/p90/p99 bit-for-bit.
@@ -17,10 +16,10 @@ prequential view is one filter on the log.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..queries.analytics import hist_hourly_bins, hist_quantile_report
+from .medallion import drain, foreach_writer
 from .sinks import ParquetTable
 
 
@@ -29,11 +28,7 @@ def histogram_stage(bins_table: ParquetTable):
     partials (bounded rows regardless of batch size)."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        partial = hist_hourly_bins(batch_df)
-        bins_table.idempotent_append(
-            partial.withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=hist",
-        )
+        bins_table.append_batch(hist_hourly_bins(batch_df), batch_id, "hist")
 
     return stage
 
@@ -46,9 +41,7 @@ def histogram_report_from_log(
     """Fold the bin-partial log (sum-merge per (day, bin) happens inside
     the shared report core) into the daily quantile report.
     ``up_to_batch`` gives the prequential as-of view."""
-    log = bins_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = bins_table.read(spark, up_to_batch=up_to_batch)
     return hist_quantile_report(log.select("day", "bin", "cnt"))
 
 
@@ -60,12 +53,4 @@ def histogram_sketch_stage(
 ) -> None:
     """Streaming wrapper: drain available event batches into the
     incremental bin log (Trigger-Once semantics, SURVEY T1)."""
-    (
-        source.writeStream.foreachBatch(histogram_stage(bins_table))
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(foreach_writer(source, histogram_stage(bins_table), checkpoint, query_name))

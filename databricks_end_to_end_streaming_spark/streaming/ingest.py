@@ -34,7 +34,8 @@ from ..functions.binary import (
     glue_schema_uuid,
 )
 from ..registry import SchemaRegistry
-from .sinks import ParquetTable
+from .medallion import drain, foreach_writer, run_continuous_foreach
+from .sinks import ParquetTable, swap_dir
 
 # Columns persisted to the raw table: the Kafka metadata the reference
 # keeps (ingest.scala:153-160) + demux id + decoded struct.
@@ -406,41 +407,21 @@ def ingest_avro_stream(
     SURVEY T1). ``quarantine`` captures poison pills (bad framing /
     unknown schema id) instead of failing the stream — see
     ``demux_decode_batch``."""
-    query = (
-        _demux_writer(
-            source_df,
-            registry,
-            target,
-            checkpoint,
-            framing,
-            mode,
-            query_name,
-            reader_schema_id,
-            quarantine,
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    body = _demux_body(registry, target, framing, mode, reader_schema_id, quarantine)
+    return drain(foreach_writer(source_df, body, checkpoint, query_name))
 
 
-def _demux_writer(
-    source_df: DataFrame,
+def _demux_body(
     registry: SchemaRegistry,
     target: ParquetTable,
-    checkpoint: str,
     framing: Framing | None,
     mode: str,
-    query_name: str,
     reader_schema_id: int | str | None,
     quarantine: ParquetTable | None,
 ):
-    """The one demux writeStream builder both trigger modes share —
-    the foreachBatch body and checkpoint discipline can't drift between
-    the availableNow drain and the always-on mode (the _append_writer
-    precedent, streaming/medallion.py). Caller picks the trigger and
-    starts."""
+    """The one demux foreachBatch body both trigger modes share, so the
+    decode path can't drift between the availableNow drain and the
+    always-on mode."""
     framing = framing or confluent_framing()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -455,11 +436,7 @@ def _demux_writer(
             quarantine=quarantine,
         )
 
-    return (
-        source_df.writeStream.foreachBatch(process)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-    )
+    return process
 
 
 def ingest_avro_stream_continuous(
@@ -482,20 +459,9 @@ def ingest_avro_stream_continuous(
     real ``batch_id`` to the demux, so replay idempotence and the
     per-(batch, schema) token'd append directories work exactly as in
     the drain mode."""
-    return (
-        _demux_writer(
-            source_df,
-            registry,
-            target,
-            checkpoint,
-            framing,
-            mode,
-            query_name,
-            reader_schema_id,
-            quarantine,
-        )
-        .trigger(processingTime=processing_time)
-        .start()
+    body = _demux_body(registry, target, framing, mode, reader_schema_id, quarantine)
+    return run_continuous_foreach(
+        source_df, body, checkpoint, query_name, processing_time
     )
 
 
@@ -523,7 +489,6 @@ def replay_quarantined(
     upsert/compact — a crash leaves either the old or the new dead-letter
     set, never half. Returns {"attempted", "still_quarantined",
     "replayed"} counts for the operator's runbook."""
-    import os
     import shutil
 
     framing = framing or confluent_framing()
@@ -554,15 +519,11 @@ def replay_quarantined(
         quarantine=residual,
     )
     still = residual.read(spark).count() if residual.exists() else 0
-    old = quarantine.path.rstrip("/") + "._old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(quarantine.path, old)
     if residual.exists():
-        os.rename(staging_path, quarantine.path)
-    elif os.path.isdir(staging_path):
-        shutil.rmtree(staging_path)
-    shutil.rmtree(old)
+        swap_dir(quarantine.path, staging_path)
+    else:
+        shutil.rmtree(staging_path, ignore_errors=True)
+        swap_dir(quarantine.path, None)
     return {
         "attempted": attempted,
         "replayed": attempted - still,

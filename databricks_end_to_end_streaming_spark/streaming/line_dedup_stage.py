@@ -30,7 +30,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..queries.dedup import cleaned_lines_doc, line_segments
-from .sinks import ParquetTable
+from .medallion import drain, foreach_writer
+from .sinks import LOG_COLUMNS, ParquetTable
 
 
 def line_dedup_batch(
@@ -47,7 +48,7 @@ def line_dedup_batch(
     flagged = segs.withColumn("first_in_batch", F.row_number().over(w) == 1)
 
     if index_table.exists():
-        index = index_table.read(spark).where(F.col("_batch_id") < batch_id)
+        index = index_table.read(spark, up_to_batch=batch_id - 1)
         batch_hashes = flagged.select("h").distinct()
         seen = (
             index.join(F.broadcast(batch_hashes), "h", "leftsemi")
@@ -63,18 +64,12 @@ def line_dedup_batch(
         "kept", F.col("first_in_batch") & F.col("_seen").isNull()
     ).persist()
     try:
-        out_table.idempotent_append(
-            cleaned_lines_doc(
-                flagged.select("doc_id", "seg_idx", "seg", "kept")
-            ).withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=cleaned",
+        out_table.append_batch(
+            cleaned_lines_doc(flagged.select("doc_id", "seg_idx", "seg", "kept")),
+            batch_id,
+            "cleaned",
         )
-        index_table.idempotent_append(
-            flagged.where("kept")
-            .select("h")
-            .withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=index",
-        )
+        index_table.append_batch(flagged.where("kept").select("h"), batch_id, "index")
     finally:
         flagged.unpersist()
 
@@ -94,10 +89,7 @@ def cleaned_from_log(
     up_to_batch: int | None = None,
 ) -> DataFrame:
     """The accumulated cleaned corpus (prequential with ``up_to_batch``)."""
-    df = out_table.read(spark)
-    if up_to_batch is not None:
-        df = df.where(F.col("_batch_id") <= up_to_batch)
-    return df.drop("_batch_id")
+    return out_table.read(spark, up_to_batch=up_to_batch).drop(*LOG_COLUMNS)
 
 
 def line_dedup_index_stage(
@@ -109,12 +101,5 @@ def line_dedup_index_stage(
 ) -> None:
     """Streaming wrapper: drain available batches (Trigger-Once, SURVEY
     T1) through the incremental line dedup."""
-    (
-        source.writeStream.foreachBatch(line_dedup_stage(out_table, index_table))
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    body = line_dedup_stage(out_table, index_table)
+    drain(foreach_writer(source, body, checkpoint, query_name))

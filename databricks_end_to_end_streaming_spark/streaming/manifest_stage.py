@@ -58,12 +58,7 @@ def manifest_stage(table: ParquetTable):
     manifest under the replay token."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        table.idempotent_append(
-            _partial(batch_df, ["source"]).withColumn(
-                "_batch_id", F.lit(batch_id)
-            ),
-            f"batchid={batch_id}/role=manifest",
-        )
+        table.append_batch(_partial(batch_df, ["source"]), batch_id, "manifest")
 
     return stage
 
@@ -74,9 +69,7 @@ def corpus_manifest_from_log(
     """(source, n_docs, total_chars, min_doc_id, max_doc_id,
     content_xor) — the batch query's exact output, folded from the
     partial log."""
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read(spark, up_to_batch=up_to_batch)
     return _fold(log, ["source"])
 
 
@@ -97,11 +90,10 @@ def split_manifest_stage(table: ParquetTable):
             .when(bucket < _SPLIT_VAL_END, F.lit("val"))
             .otherwise(F.lit("test"))
         )
-        table.idempotent_append(
-            _partial(
-                batch_df.withColumn("split", split), ["source", "split"]
-            ).withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=splitmanifest",
+        table.append_batch(
+            _partial(batch_df.withColumn("split", split), ["source", "split"]),
+            batch_id,
+            "splitmanifest",
         )
 
     return stage
@@ -112,9 +104,7 @@ def split_manifest_from_log(
 ) -> DataFrame:
     """(source, split, n_docs, total_chars, content_xor) — the batch
     query's exact output columns, folded from the partial log."""
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read(spark, up_to_batch=up_to_batch)
     return _fold(log, ["source", "split"]).select(
         "source", "split", "n_docs", "total_chars", "content_xor"
     )

@@ -67,6 +67,37 @@ def gold_transform(df: DataFrame, cutoff) -> DataFrame:
     )
 
 
+def foreach_writer(
+    source: DataFrame,
+    body,
+    checkpoint: str,
+    query_name: str,
+    output_mode: str = "append",
+):
+    """The one foreachBatch writer every stage builds, in both trigger
+    modes — sink options and checkpoint discipline can't drift between
+    the availableNow drain and the always-on mode. ``body(batch_df,
+    batch_id)`` is the stage's foreachBatch function; replay safety is
+    the body's (``ParquetTable.append_batch``). Caller picks the trigger
+    (``drain`` or a processing-time trigger) and starts."""
+    return (
+        source.writeStream.foreachBatch(body)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .queryName(query_name)
+    )
+
+
+def drain(writer):
+    """Run ``writer`` (a ``DataStreamWriter``) as one availableNow drain:
+    process everything available, wait for termination and return the
+    terminated query. A failed micro-batch re-raises here (Trigger-Once
+    semantics, SURVEY T1)."""
+    query = writer.trigger(availableNow=True).start()
+    query.awaitTermination()
+    return query
+
+
 def _append_writer(
     df: DataFrame, target: ParquetTable, checkpoint: str, query_name: str
 ):
@@ -100,12 +131,7 @@ def _run_append(
         from .observe import observe_stream
 
         df = observe_stream(df, query_name, observe_rules)
-    q = (
-        _append_writer(df, target, checkpoint, query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = drain(_append_writer(df, target, checkpoint, query_name))
     if observe_rules is not None:
         from .observe import progress_metrics
 
@@ -148,14 +174,11 @@ def run_continuous_foreach(
     ``StreamingQuery`` handle (caller stops it). The replay-token
     protocol is trigger-agnostic by design: a timed trigger that
     re-runs after a crash replays the same batch id, and the stage's
-    idempotent_append overwrites its own token — soaked end-to-end in
+    ``append_batch`` overwrites its own token — soaked end-to-end in
     tests/test_soak_timed_stages.py by deleting the newest checkpoint
     commit marker and restarting."""
     return (
-        source.writeStream.foreachBatch(stage)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
+        foreach_writer(source, stage, checkpoint, query_name)
         .trigger(processingTime=processing_time)
         .start()
     )
@@ -248,12 +271,7 @@ def _gold_writer(
     def overwrite(batch_df: DataFrame, _batch_id: int) -> None:
         gold.overwrite_atomic(batch_df)
 
-    return (
-        agg.writeStream.foreachBatch(overwrite)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-    )
+    return foreach_writer(agg, overwrite, checkpoint, query_name, "complete")
 
 
 def gold_stage(
@@ -265,12 +283,7 @@ def gold_stage(
 ) -> None:
     """Complete-mode aggregation drain (K3): one availableNow pass over
     what silver holds."""
-    (
-        _gold_writer(spark, silver, gold, checkpoint, cutoff, "gold_layer")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(_gold_writer(spark, silver, gold, checkpoint, cutoff, "gold_layer"))
 
 
 def upsert_stage(
@@ -303,15 +316,7 @@ def upsert_stage(
             updates = batch_df.dropDuplicates(keys)
         target.upsert(batch_df.sparkSession, updates, keys)
 
-    (
-        source.writeStream.foreachBatch(merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(foreach_writer(source, merge, checkpoint, query_name, "update"))
 
 
 def enrich_transform(df: DataFrame, dim: DataFrame, on: str = "productId") -> DataFrame:
@@ -452,15 +457,7 @@ def dq_split_stage(
         finally:
             batch_df.unpersist()
 
-    (
-        source.writeStream.foreachBatch(split)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(foreach_writer(source, split, checkpoint, query_name))
 
 
 def gold_incremental_stage(
@@ -490,15 +487,7 @@ def gold_incremental_stage(
             batch_df.sparkSession, batch_df, ["day_start", "type", "color", "size"]
         )
 
-    (
-        agg.writeStream.foreachBatch(merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .queryName("gold_incremental_layer")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(foreach_writer(agg, merge, checkpoint, "gold_incremental_layer", "update"))
 
 
 def run_pipeline_continuous(

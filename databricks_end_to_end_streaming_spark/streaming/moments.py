@@ -65,10 +65,8 @@ def moments_stage(
     ``stream.writeStream.foreachBatch(moments_stage(...))``."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        partials = partial_moments(batch_df, key, x, y).withColumn(
-            "_batch_id", F.lit(batch_id)
-        )
-        table.idempotent_append(partials, f"batchid={batch_id}/role=moments")
+        partials = partial_moments(batch_df, key, x, y)
+        table.append_batch(partials, batch_id, "moments")
 
     return stage
 

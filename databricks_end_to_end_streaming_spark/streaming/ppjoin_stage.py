@@ -39,7 +39,8 @@ from ..queries.dedup import (
     ppjoin_position_ok,
     ppjoin_prefix_len,
 )
-from .sinks import ParquetTable, exclude_batch
+from .medallion import drain, foreach_writer
+from .sinks import LOG_COLUMNS, ParquetTable, exclude_batch
 
 
 def hash_order_prefix_rows(sh_arr: DataFrame) -> DataFrame:
@@ -71,9 +72,7 @@ def exact_neardup_batch(
     spark = batch_df.sparkSession
     batch_df.persist()
     try:
-        new_prefix = hash_order_prefix_rows(
-            doc_shingle_arrays(batch_df)
-        ).withColumn("_batch_id", F.lit(batch_id))
+        new_prefix = hash_order_prefix_rows(doc_shingle_arrays(batch_df))
 
         # PPJoin length filter: size-incompatible blockmates can never
         # reach the threshold (t*|x| <= |y| <= |x|/t) — integer
@@ -102,9 +101,7 @@ def exact_neardup_batch(
         # new-vs-seen: broadcast the BATCH side over the accumulated
         # index (strictly older batches — replay-safe)
         if prefix_table.exists():
-            seen = prefix_table.read(spark).where(
-                F.col("_batch_id") < batch_id
-            )
+            seen = prefix_table.read(spark, up_to_batch=batch_id - 1)
             cross = (
                 F.broadcast(new_prefix.alias("n"))
                 .join(
@@ -130,25 +127,16 @@ def exact_neardup_batch(
         if docs_table.exists():
             hist = docs_table.read(spark)
             prior = exclude_batch(hist, batch_id, docs_table.path)
-            corpus = prior.drop("batchid", "role", "_batch_id").unionByName(
+            corpus = prior.drop(*LOG_COLUMNS).unionByName(
                 batch_df, allowMissingColumns=True
             )
         else:
             corpus = batch_df
-        pairs = (
-            exact_pair_scores(cand, corpus)
-            .where(F.col("jaccard") >= threshold)
-            .withColumn("_batch_id", F.lit(batch_id))
-        )
+        pairs = exact_pair_scores(cand, corpus).where(F.col("jaccard") >= threshold)
 
-        pairs_table.idempotent_append(pairs, f"batchid={batch_id}/role=pairs")
-        prefix_table.idempotent_append(
-            new_prefix, f"batchid={batch_id}/role=prefix"
-        )
-        docs_table.idempotent_append(
-            batch_df.withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=docs",
-        )
+        pairs_table.append_batch(pairs, batch_id, "pairs")
+        prefix_table.append_batch(new_prefix, batch_id, "prefix")
+        docs_table.append_batch(batch_df, batch_id, "docs")
     finally:
         batch_df.unpersist()
 
@@ -158,9 +146,7 @@ def exact_pairs_from_log(
 ) -> DataFrame:
     """Accumulated verified pairs (the exact near-dup set over every
     ingested document); prequential with ``up_to_batch``."""
-    log = pairs_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = pairs_table.read(spark, up_to_batch=up_to_batch)
     return log.select(
         "doc_a", "doc_b", "n_sh_a", "n_sh_b", "overlap", "jaccard"
     )
@@ -182,12 +168,4 @@ def exact_neardup_stage(
             batch_df, docs_table, prefix_table, pairs_table, batch_id, threshold
         )
 
-    (
-        source.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(foreach_writer(source, process, checkpoint, query_name))

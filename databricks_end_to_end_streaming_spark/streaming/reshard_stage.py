@@ -28,10 +28,8 @@ def reshard_stage(table: ParquetTable):
     (n_docs, n_incoming) partial under the replay token."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        partial = reshard_partials(
-            batch_df.select("doc_id")
-        ).withColumn("_batch_id", F.lit(batch_id))
-        table.idempotent_append(partial, f"batchid={batch_id}/role=reshard")
+        partial = reshard_partials(batch_df.select("doc_id"))
+        table.append_batch(partial, batch_id, "reshard")
 
     return stage
 
@@ -43,9 +41,7 @@ def reshard_report_from_log(
 ) -> DataFrame:
     """(shard, n_docs, n_incoming) — the batch query's exact output,
     folded from the partial log."""
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read(spark, up_to_batch=up_to_batch)
     return (
         log.groupBy("shard")
         .agg(

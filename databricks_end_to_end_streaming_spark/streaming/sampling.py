@@ -21,7 +21,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from .sinks import ParquetTable
+from .sinks import LOG_COLUMNS, ParquetTable
 
 
 def _ranked(df: DataFrame, group: str, id_col: str, k: int) -> DataFrame:
@@ -39,10 +39,7 @@ def sample_stage(table: ParquetTable, group: str, id_col: str, k: int):
     rows (by md5 of ``id_col``) under the replay token."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        partial = _ranked(batch_df, group, id_col, k).withColumn(
-            "_batch_id", F.lit(batch_id)
-        )
-        table.idempotent_append(partial, f"batchid={batch_id}/role=sample")
+        table.append_batch(_ranked(batch_df, group, id_col, k), batch_id, "sample")
 
     return stage
 
@@ -53,11 +50,8 @@ def finalize_sample(
     """Global bottom-k per group over the partial log — the merge of the
     summary. Log rows are O(batches x groups x k); compact the table
     when batch count grows, the fold result is unchanged."""
-    log = table.read(spark).drop(
-        # per-partial bookkeeping: the hash is recomputed (deterministic),
-        # and the idempotent-token dirs surface as partition columns
-        "_h", "_batch_id", "batchid", "role"
-    )
+    # per-partial bookkeeping: the hash is recomputed (deterministic)
+    log = table.read(spark).drop("_h", *LOG_COLUMNS)
     return _ranked(log, group, id_col, k).drop("_h")
 
 
@@ -96,10 +90,8 @@ def weighted_sample_stage(
     ``sample_stage`` for importance-/quality-weighted corpus sampling."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        partial = _weighted_ranked(
-            batch_df, group, id_col, weight_col, k
-        ).withColumn("_batch_id", F.lit(batch_id))
-        table.idempotent_append(partial, f"batchid={batch_id}/role=wsample")
+        partial = _weighted_ranked(batch_df, group, id_col, weight_col, k)
+        table.append_batch(partial, batch_id, "wsample")
 
     return stage
 
@@ -113,5 +105,5 @@ def finalize_weighted_sample(
     k: int,
 ) -> DataFrame:
     """Global weighted bottom-k per group over the partial log."""
-    log = table.read(spark).drop("_es", "_batch_id", "batchid", "role")
+    log = table.read(spark).drop("_es", *LOG_COLUMNS)
     return _weighted_ranked(log, group, id_col, weight_col, k).drop("_es")

@@ -23,6 +23,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from .medallion import drain, foreach_writer
 from .sinks import ParquetTable
 
 
@@ -46,10 +47,7 @@ def seasonal_stage(profile_table: ParquetTable):
     """foreachBatch body factory: append this batch's cell partials."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        profile_table.idempotent_append(
-            seasonal_cells(batch_df).withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=seasonal",
-        )
+        profile_table.append_batch(seasonal_cells(batch_df), batch_id, "seasonal")
 
     return stage
 
@@ -61,9 +59,8 @@ def profile_from_log(
 ) -> DataFrame:
     """Fold the cell log by addition. ``before_batch`` keeps strictly
     older batches only (the prequential view a scorer must use)."""
-    log = profile_table.read(spark)
-    if before_batch is not None:
-        log = log.where(F.col("_batch_id") < before_batch)
+    up_to = None if before_batch is None else before_batch - 1
+    log = profile_table.read(spark, up_to_batch=up_to)
     return log.groupBy("event_type", "hr").agg(
         F.sum("m").alias("m"), F.sum("s").alias("s")
     )
@@ -120,22 +117,10 @@ def seasonal_monitor_stage(
         try:
             if profile_table.exists():
                 prof = profile_from_log(spark, profile_table, batch_id)
-                report = score_against_profile(batch_df, prof).withColumn(
-                    "_batch_id", F.lit(batch_id)
-                )
-                report_table.idempotent_append(
-                    report, f"batchid={batch_id}/role=report"
-                )
+                report = score_against_profile(batch_df, prof)
+                report_table.append_batch(report, batch_id, "report")
             seasonal_stage(profile_table)(batch_df, batch_id)
         finally:
             batch_df.unpersist()
 
-    (
-        source.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(foreach_writer(source, process, checkpoint, query_name))

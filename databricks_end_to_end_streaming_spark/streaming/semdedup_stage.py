@@ -71,8 +71,7 @@ def semdedup_batch(
     )
     if index_table.exists():
         seen = (
-            index_table.read(spark)
-            .where(F.col("_batch_id") < batch_id)
+            index_table.read(spark, up_to_batch=batch_id - 1)
             .select(
                 F.col(id_col).alias("id_a"),
                 "cluster",
@@ -99,19 +98,15 @@ def semdedup_batch(
             "cluster",
             F.coalesce("_dropped", F.lit(False)).alias("dropped"),
         )
-        .withColumn("_batch_id", F.lit(batch_id))
     )
-    index_rows = assigned.withColumn("_batch_id", F.lit(batch_id))
     # Verdicts FIRST: they read the index (strictly older batches), and
     # on a replay the index append below overwrites this batch's own
     # partition — writing verdicts after that would re-execute the index
     # scan over deleted files (the same write-ordering discipline as
     # neardup_batch: every reader of a table flushes before the table's
     # own partition is rewritten).
-    verdict_table.idempotent_append(
-        verdicts, f"batchid={batch_id}/role=verdicts"
-    )
-    index_table.idempotent_append(index_rows, f"batchid={batch_id}/role=index")
+    verdict_table.append_batch(verdicts, batch_id, "verdicts")
+    index_table.append_batch(assigned, batch_id, "index")
 
 
 def kept_vectors(spark: SparkSession, verdict_table: ParquetTable) -> DataFrame:

@@ -70,12 +70,13 @@ def delta_available(spark: SparkSession) -> bool:
 
 
 def parse_txn_token(token: str) -> tuple[str, int]:
-    """Map an idempotent-append replay token (``batchid=7/schemaid=2``,
-    ``batchid=7/side=good`` — streaming/ingest.py:121,
-    streaming/medallion.py:305) to Delta's (txnAppId, txnVersion) pair:
-    the batch id is the monotonically-increasing version, everything
-    else identifies the writer stream. Pure + deterministic so replays
-    of the same token always collide (which is the point)."""
+    """Map an idempotent-append replay token (``batchid=7/role=moments``
+    from ``append_batch``, ``batchid=7/schemaid=2`` from the ingest
+    demux, ``batchid=7/side=good`` from ``dq_split_stage``) to Delta's
+    (txnAppId, txnVersion) pair: the batch id is the
+    monotonically-increasing version, everything else identifies the
+    writer stream. Pure + deterministic so replays of the same token
+    always collide (which is the point)."""
     parts = [p for p in token.split("/") if p]
     version: int | None = None
     app_bits: list[str] = []
@@ -108,6 +109,40 @@ def batch_id_col(df: DataFrame) -> F.Column:
         "_batch_id data column; replay filtering needs one of them "
         "(write the stage's rows with .withColumn('_batch_id', ...))"
     )
+
+
+# The bookkeeping columns a replay log carries beside its payload: the
+# ``_batch_id`` stamp and the token directories ``append_batch`` writes
+# (``batchid``/``role`` surface as partition columns on read). Folds
+# that hand a log's rows back as payload drop exactly these.
+LOG_COLUMNS = ("_batch_id", "batchid", "role")
+
+
+def swap_dir(live: str, staging: str | None) -> None:
+    """Replace directory ``live`` with the fully written ``staging``
+    directory (``None``: remove ``live``) by renaming ``live`` aside to
+    ``live._old``, renaming staging in, then dropping the aside copy. A
+    crash in any window leaves either the old or the new directory
+    intact and recoverable (``ParquetTable._recover_swap`` heals the
+    in-between states on the next access). Relies on same-FS rename
+    atomicity — local/POSIX only; on an object store the Delta
+    transaction log replaces this protocol entirely."""
+    old = live.rstrip("/") + "._old"
+    if os.path.exists(old):
+        shutil.rmtree(old)
+    if os.path.isdir(live):
+        os.rename(live, old)
+    if staging is not None:
+        os.rename(staging, live)
+    if os.path.isdir(old):
+        shutil.rmtree(old)
+
+
+def batch_token(batch_id: int, role: str) -> str:
+    """The replay token of one (micro-batch, role) write: the directory
+    ``append_batch`` writes under, surfacing as the ``batchid`` and
+    ``role`` partition columns on read."""
+    return f"batchid={batch_id}/role={role}"
 
 
 _warned_legacy_batch_tables: set[str] = set()
@@ -292,6 +327,24 @@ class ParquetTable:
             return
         df.write.mode("overwrite").parquet(os.path.join(self.path, token))
 
+    def append_batch(
+        self,
+        df: DataFrame,
+        batch_id: int,
+        role: str,
+    ) -> None:
+        """The replay-log append every foreachBatch stage shares: stamp
+        the rows with ``_batch_id`` and write them under the
+        ``batchid=N/role=R`` token, so a replayed (batch, role)
+        overwrites its own directory instead of double-counting, and
+        ``read(up_to_batch=)`` serves any as-of-batch view of the log.
+        The stamp is the plain IntegerType literal
+        ``backfill_batch_column`` matches."""
+        self.idempotent_append(
+            df.withColumn("_batch_id", F.lit(batch_id)),
+            batch_token(batch_id, role),
+        )
+
     def overwrite(self, df: DataFrame) -> None:
         """Full rewrite — complete-output-mode sink (gold, SURVEY K3)."""
         self._recover_swap()
@@ -301,27 +354,14 @@ class ParquetTable:
         df.write.mode("overwrite").parquet(self.path)
 
     def _staged_swap_write(self, df: DataFrame) -> None:
-        """Atomic full-table rewrite: stage to a sibling dir, rename the
-        live dir aside, rename staging in, drop the aside copy. A crash
-        in any window leaves either the old or the new table intact and
-        recoverable (``_recover_swap`` heals the in-between states on the
-        next access). Relies on same-FS rename atomicity — local/POSIX
-        only; on an object store the Delta transaction log replaces this
-        protocol entirely."""
+        """Atomic full-table rewrite: stage to a sibling dir, then
+        ``swap_dir`` it in."""
         staging = self.path.rstrip("/") + "._staging"
         w = df.write.mode("overwrite")
         if self.partition_by:
             w = w.partitionBy(*self.partition_by)
         w.parquet(staging)
-        old = self.path.rstrip("/") + "._old"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.isdir(self.path):
-            os.rename(self.path, old)
-            os.rename(staging, self.path)
-            shutil.rmtree(old)
-        else:
-            os.rename(staging, self.path)
+        swap_dir(self.path, staging)
 
     def overwrite_atomic(self, df: DataFrame) -> None:
         """Complete-mode rewrite that CONCURRENT READERS can live with:
@@ -483,28 +523,40 @@ class ParquetTable:
             "rows_after": after,
         }
 
-    def read(self, spark: SparkSession) -> DataFrame:
+    def read(
+        self, spark: SparkSession, up_to_batch: int | None = None
+    ) -> DataFrame:
+        """The whole table; with ``up_to_batch``, only the rows stamped
+        by batches <= ``up_to_batch`` (the as-of / prequential view of a
+        replay log — ``up_to_batch=batch_id - 1`` is the strictly-older
+        probe a replayed batch needs, so it never sees its own
+        half-written rows). Unstamped (NULL ``_batch_id``) rows are not
+        in any as-of view."""
         self._recover_swap()
         if self._delta(spark):
-            return spark.read.format("delta").load(self.path)
-        try:
-            return (
-                spark.read.option("mergeSchema", "true")
-                .option("basePath", self.path)
-                .option("recursiveFileLookup", "false")
-                .parquet(self.path)
-            )
-        except Exception as e:  # noqa: BLE001 - re-raise with migration hint
-            if "CANNOT_MERGE_SCHEMAS" not in str(e):
-                raise
-            raise RuntimeError(
-                f"table {self.path} holds files with un-mergeable column "
-                "types (e.g. a raw table written before valueSchemaId "
-                "widened from int to long — functions/binary.py "
-                "be_int_from_bytes). Run a one-time "
-                "ParquetTable(path).rewrite_columns(spark, "
-                "{'valueSchemaId': 'bigint'}) to widen in place."
-            ) from e
+            df = spark.read.format("delta").load(self.path)
+        else:
+            try:
+                df = (
+                    spark.read.option("mergeSchema", "true")
+                    .option("basePath", self.path)
+                    .option("recursiveFileLookup", "false")
+                    .parquet(self.path)
+                )
+            except Exception as e:  # noqa: BLE001 - re-raise with migration hint
+                if "CANNOT_MERGE_SCHEMAS" not in str(e):
+                    raise
+                raise RuntimeError(
+                    f"table {self.path} holds files with un-mergeable column "
+                    "types (e.g. a raw table written before valueSchemaId "
+                    "widened from int to long — functions/binary.py "
+                    "be_int_from_bytes). Run a one-time "
+                    "ParquetTable(path).rewrite_columns(spark, "
+                    "{'valueSchemaId': 'bigint'}) to widen in place."
+                ) from e
+        if up_to_batch is not None:
+            df = df.where(F.col("_batch_id") <= up_to_batch)
+        return df
 
     def rewrite_columns(self, spark: SparkSession, cast_map: dict[str, str]) -> None:
         """One-shot in-place column-type migration (e.g. valueSchemaId
@@ -636,12 +688,7 @@ class ParquetTable:
                 self.path.rstrip("/") + f"._staging_{key}={value}"
             )
             df.repartition(n_parts).write.mode("overwrite").parquet(staging)
-            old = pdir + "._old"
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            os.rename(pdir, old)
-            os.rename(staging, pdir)
-            shutil.rmtree(old)
+            swap_dir(pdir, staging)
             after = [
                 f
                 for r, _d, fs in os.walk(pdir)
@@ -720,18 +767,7 @@ class ParquetTable:
             df = df.repartition(n_parts, *self.partition_by)
         else:
             df = df.repartition(n_parts)
-        staging = self.path.rstrip("/") + "._staging"
-        w = df.write.mode("overwrite")
-        if self.partition_by:
-            w = w.partitionBy(*self.partition_by)
-        w.parquet(staging)
-
-        old = self.path.rstrip("/") + "._old"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        os.rename(self.path, old)
-        os.rename(staging, self.path)
-        shutil.rmtree(old)
+        self._staged_swap_write(df)
         return {
             "files_before": len(before),
             "files_after": len(_files(self.path)),

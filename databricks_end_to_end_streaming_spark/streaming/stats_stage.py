@@ -127,9 +127,7 @@ def ks_drift(
     reproduces ``ks_test_value_drift`` bit-for-bit."""
     from ..queries.analytics import ks_over_period_value_counts
 
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read(spark, up_to_batch=up_to_batch)
     counts = (
         log.groupBy("key", "bin_lo")
         .agg(
@@ -162,9 +160,7 @@ def robust_stats_from_log(
     ``robust_over_value_counts``, the batch query's exact core."""
     from ..queries.analytics import robust_over_value_counts
 
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read(spark, up_to_batch=up_to_batch)
     vc = (
         log.groupBy("key", "bin_lo")
         .agg(F.sum("o").alias("cnt"))
@@ -188,10 +184,7 @@ def cusum_stage(table: ParquetTable):
     from ..queries.analytics import hourly_cents
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        table.idempotent_append(
-            hourly_cents(batch_df).withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=hourlycents",
-        )
+        table.append_batch(hourly_cents(batch_df), batch_id, "hourlycents")
 
     return stage
 
@@ -204,9 +197,7 @@ def cusum_from_log(
     core (drained == batch bit-for-bit)."""
     from ..queries.analytics import cusum_over_hourly_cents
 
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read(spark, up_to_batch=up_to_batch)
     hourly = (
         log.groupBy("event_type", "hour")
         .agg(F.sum("cents").alias("cents"))
@@ -223,9 +214,7 @@ def durbin_watson_from_log(
     time-series monitors (the KS/robust pairing, again)."""
     from ..queries.analytics import dw_over_hourly_cents
 
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read(spark, up_to_batch=up_to_batch)
     hourly = (
         log.groupBy("event_type", "hour")
         .agg(F.sum("cents").alias("cents"))
@@ -251,9 +240,8 @@ def spearman_counts_stage(table: ParquetTable):
             )
             .groupBy("key", "us", "value")
             .agg(F.count("*").alias("m"))
-            .withColumn("_batch_id", F.lit(batch_id))
         )
-        table.idempotent_append(partials, f"batchid={batch_id}/role=uvcounts")
+        table.append_batch(partials, batch_id, "uvcounts")
 
     return stage
 
@@ -266,9 +254,7 @@ def spearman_trend(
     query's closed-form core."""
     from ..queries.analytics import spearman_over_uv_counts
 
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read(spark, up_to_batch=up_to_batch)
     counts = (
         log.groupBy("key", "us", "value")
         .agg(F.sum("m").alias("m"))

@@ -5,7 +5,7 @@ The per-batch partial is the batch's own (user_id, day, cents) daily
 totals — a SUM monoid keyed by calendar date (not a corpus-relative
 index, which would shift as new minimum days arrive), so partials from
 any batch slicing fold to the same daily relation. Replay safety comes
-from the token'd ``idempotent_append`` protocol. The read side folds
+from ``ParquetTable.append_batch``. The read side folds
 the log through the SAME search core the batch query uses
 (``ts_pattern_topk_from_daily``), which re-derives the day-zero anchor
 and the corpus-week pattern from the folded totals — so a drained
@@ -19,7 +19,6 @@ prequential view is one filter on the log.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..queries.analytics import ts_daily_cents, ts_pattern_topk_from_daily
@@ -30,11 +29,7 @@ def timeseries_stage(daily_table: ParquetTable):
     """foreachBatch body factory: append this batch's daily partials."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        partial = ts_daily_cents(batch_df)
-        daily_table.idempotent_append(
-            partial.withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=tsdaily",
-        )
+        daily_table.append_batch(ts_daily_cents(batch_df), batch_id, "tsdaily")
 
     return stage
 
@@ -47,9 +42,7 @@ def timeseries_topk_from_log(
     """Fold the daily-partial log into the pattern-search top-k
     (sum-merge per (user, day) happens inside the shared core).
     ``up_to_batch`` gives the prequential as-of view."""
-    log = daily_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = daily_table.read(spark, up_to_batch=up_to_batch)
     return ts_pattern_topk_from_daily(
         log.select("user_id", "day", "cents")
     )

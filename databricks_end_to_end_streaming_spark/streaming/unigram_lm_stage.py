@@ -43,9 +43,8 @@ def vocab_stage(table: ParquetTable, text_col: str = "text"):
             .where(F.col("word") != "")
             .groupBy("word")
             .agg(F.count("*").alias("freq"))
-            .withColumn("_batch_id", F.lit(batch_id))
         )
-        table.idempotent_append(partial, f"batchid={batch_id}/role=vocab")
+        table.append_batch(partial, batch_id, "vocab")
 
     return stage
 
@@ -55,9 +54,7 @@ def folded_vocab(
 ) -> DataFrame:
     """Merge the partial log to one (word, freq) row per word; with
     ``up_to_batch``, only batches <= that id contribute."""
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read(spark, up_to_batch=up_to_batch)
     return log.groupBy("word").agg(F.sum("freq").alias("freq"))
 
 

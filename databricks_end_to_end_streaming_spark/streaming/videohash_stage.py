@@ -6,8 +6,8 @@ audiohash_stage, video: this).
 The per-batch partial is the batch's own (media_id, frame_idx, ahash,
 dhash) rows — per-frame hashing is a pure function of the payload, so
 the frame-hash LOG is slicing- and order-insensitive by construction
-and replay safety comes from the token'd ``idempotent_append``
-protocol. The read side runs the SAME temporal-alignment vote the
+and replay safety comes from ``ParquetTable.append_batch``.
+The read side runs the SAME temporal-alignment vote the
 batch query uses (``video_pairs_from_frame_hashes``) over the folded
 log, so a drained stream reproduces the batch pair list bit-for-bit;
 ``video_pairs_with_batch`` restricts the vote to pairs touching the
@@ -33,10 +33,7 @@ def videohash_stage(sig_table: ParquetTable):
     and append the signatures (2 longs per frame)."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        sig_table.idempotent_append(
-            frame_hashes(batch_df).withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=videohash",
-        )
+        sig_table.append_batch(frame_hashes(batch_df), batch_id, "videohash")
 
     return stage
 
@@ -46,9 +43,7 @@ def _folded_log(
     sig_table: ParquetTable,
     up_to_batch: int | None,
 ) -> DataFrame:
-    log = sig_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = sig_table.read(spark, up_to_batch=up_to_batch)
     return log.select("media_id", "frame_idx", "ahash", "dhash").dropDuplicates(
         ["media_id", "frame_idx"]
     )

@@ -67,6 +67,12 @@ def test_drained_equals_batch_in_doc_id_order(spark, workdir):
     for bid, cond in enumerate(["doc_id < 2", "doc_id = 2", "doc_id > 2"]):
         line_dedup_batch(docs.where(cond), out, idx, bid)
     assert _drained(spark, out) == _batch_result(docs)
+    # the fold hands back the batch twin's columns, with no replay-log
+    # bookkeeping (_batch_id, token partition dirs) leaking through
+    batch_cols = cleaned_lines_doc(
+        _first_occurrence_kept(line_segments(docs))
+    ).columns
+    assert cleaned_from_log(spark, out).columns == batch_cols
 
 
 def test_cross_batch_duplicate_line_is_dropped(spark, workdir):
