@@ -84,10 +84,7 @@ def _last_checked_round() -> dict[str, int]:
 # driver-recorded cross-engine evidence, not just the local full-gate
 # artifact. Clear an entry once the driver round lands green
 # (tests/test_entry_rotation.py checks each name is registered+oracled).
-_REVERIFY_FIRST: tuple[str, ...] = (
-    "domain_quota_cap",  # r12: per-host -> PSL eTLD+1, both sides rewritten
-    "spearman_trend_per_type",  # r12: int64 -> DECIMAL(38,0) moment chain
-)
+_REVERIFY_FIRST: tuple[str, ...] = ()
 
 
 def _rotated(names: list[str], oracled: frozenset[str]) -> list[str]:

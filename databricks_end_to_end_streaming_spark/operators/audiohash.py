@@ -35,7 +35,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .multimodal import _decode_payload, spread_for_python
+from ..tables import spread_small_scan
+from .multimodal import _decode_payload
 from .simhash import hamming_neardup_pairs
 
 N_FRAMES = 65  # 64 adjacent-energy deltas -> 64-bit signature
@@ -95,7 +96,7 @@ def audio_hashes(media: DataFrame) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    return spread_for_python(media).mapInPandas(mapper, out_schema)
+    return spread_small_scan(media, "media_id").mapInPandas(mapper, out_schema)
 
 
 def audio_neardup_pairs(media: DataFrame, max_hamming: int = 3) -> DataFrame:

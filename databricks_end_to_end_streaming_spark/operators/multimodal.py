@@ -23,7 +23,6 @@ sampling) explodes row counts.
 from __future__ import annotations
 
 import hashlib
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -31,6 +30,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..tables import spread_small_scan
 
 MEDIA_META = T.StructType(
     [
@@ -54,23 +55,6 @@ MEDIA_SCHEMA = T.StructType(
 
 _REAL_FORMATS = {"jpeg", "png", "wav", "mp3", "mp4", "webm"}
 
-
-def spread_for_python(df: DataFrame, key: str = "media_id") -> DataFrame:
-    """Spread a small-file input across the cluster before a Python
-    decode pass (r13, guide §2.5 input skew): a single-parquet-file scan
-    arrives as 1-2 partitions, which serializes the whole mapInPandas
-    stage onto 1-2 cores — measured 7.4 s -> ~1 s for the video hash
-    pass at sf0.1. Hash-repartitions on ``key`` (deterministic; a
-    keyless round-robin would pay sort-before-repartition) ONLY when
-    the scan's partition count is below defaultParallelism, so at scale
-    — where the scan is already parallel — this is a no-op and adds no
-    exchange."""
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD") == "1":
-        return df  # measurement escape hatch (see tables.spread_small_scan)
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < n_parts:
-        return df.repartition(n_parts, key)
-    return df
 
 # Optional real codecs: probed once per python worker. When present,
 # jpeg/png decode through Pillow and wav through soundfile; otherwise the
@@ -211,7 +195,7 @@ def image_feature_stats(media: DataFrame) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    return spread_for_python(media).mapInPandas(mapper, out_schema)
+    return spread_small_scan(media, "media_id").mapInPandas(mapper, out_schema)
 
 
 def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
@@ -240,7 +224,7 @@ def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    return spread_for_python(media).mapInPandas(mapper, MEDIA_SCHEMA)
+    return spread_small_scan(media, "media_id").mapInPandas(mapper, MEDIA_SCHEMA)
 
 
 def sample_video_frames(media: DataFrame, every_k: int = 2) -> DataFrame:
@@ -276,8 +260,8 @@ def sample_video_frames(media: DataFrame, every_k: int = 2) -> DataFrame:
                     )
             yield pd.DataFrame(rows)
 
-    sampled = spread_for_python(
-        media.where(F.col("kind") == "video")
+    sampled = spread_small_scan(
+        media.where(F.col("kind") == "video"), "media_id"
     ).mapInPandas(mapper, out_schema)
     # rebalance: frame explosion skews partition sizes by video length
     return sampled.repartition("media_id")
@@ -390,4 +374,4 @@ def sniff_media_meta(media: DataFrame) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    return spread_for_python(media).mapInPandas(mapper, out_schema)
+    return spread_small_scan(media, "media_id").mapInPandas(mapper, out_schema)

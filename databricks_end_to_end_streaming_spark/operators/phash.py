@@ -38,7 +38,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .multimodal import _decode_payload, spread_for_python
+from ..tables import spread_small_scan
+from .multimodal import _decode_payload
 from .simhash import hamming_neardup_pairs
 
 GRID = 8  # aHash grid; dHash uses GRID rows x (GRID+1) cols
@@ -153,7 +154,7 @@ def perceptual_hashes(media: DataFrame) -> DataFrame:
                 rows.append({"media_id": media_id, "ahash": ah, "dhash": dh})
             yield pd.DataFrame(rows)
 
-    return spread_for_python(media).mapInPandas(mapper, out_schema)
+    return spread_small_scan(media, "media_id").mapInPandas(mapper, out_schema)
 
 
 FRAME_IDX_BITS = 20  # composite frame id: (media_id << 20) | frame_idx
@@ -195,7 +196,7 @@ def frame_hashes(media: DataFrame) -> DataFrame:
                     )
             yield pd.DataFrame(rows)
 
-    return spread_for_python(media).mapInPandas(mapper, out_schema)
+    return spread_small_scan(media, "media_id").mapInPandas(mapper, out_schema)
 
 
 def video_neardup_pairs(

@@ -50,19 +50,25 @@ RAW_COLUMNS = [
     "parsedValue",
 ]
 
+# Rows per task when the demux coalesces a small subset (_decode_sized).
+DECODE_ROWS_PER_TASK = 4096
+# Per-id write jobs of one micro-batch that run concurrently.
+DEMUX_PARALLELISM = 4
+
 
 @dataclass
 class Framing:
     """Wire-format codec: how to slice the demux id + Avro payload out of
     the Kafka value bytes. ``compression_col`` (framings that carry a
     compression marker) selects rows whose payload must be inflated
-    before Avro decode."""
+    before Avro decode. ``valid_col`` is the wire-format check: rows
+    failing it are quarantined as bad framing."""
 
     name: str
     schema_id_col: F.Column
     payload_col: F.Column
+    valid_col: F.Column
     compression_col: F.Column | None = None
-    valid_col: F.Column | None = None
 
 
 def confluent_framing() -> Framing:
@@ -137,13 +143,14 @@ def _quarantine(
     df: DataFrame,
     table: ParquetTable,
     reason: str,
-    batch_id: int | None,
+    batch_id: int,
+    n: int,
     sid: int | str | None = None,
-    n_rows: int | None = None,
 ) -> None:
-    """Land undecodable records raw: Kafka metadata, the ORIGINAL value
-    bytes, the (stringified — framings differ in id type) schema id,
-    and the reason. Idempotent per (batch, reason, id) token."""
+    """Land ``n`` undecodable records raw: Kafka metadata, the ORIGINAL
+    value bytes, the (stringified — framings differ in id type) schema
+    id, and the reason. Sized like a decode subset; idempotent per
+    (batch, reason, id) token."""
     out = df.select(
         "key",
         "value",
@@ -155,32 +162,26 @@ def _quarantine(
         F.col("valueSchemaId").cast("string").alias("valueSchemaId"),
         F.lit(reason).alias("quarantineReason"),
     )
-    if batch_id is not None:
-        # uniform token depth: mixed-depth key=value dirs would conflict
-        # in partition discovery on read
-        token = f"batchid={batch_id}/reason={reason}/sid={sid if sid is not None else 'any'}"
-        table.idempotent_append(out, token, n_rows=n_rows)
-    else:
-        table.append(out)
+    # uniform token depth: mixed-depth key=value dirs would conflict
+    # in partition discovery on read
+    token = f"batchid={batch_id}/reason={reason}/sid={sid if sid is not None else 'any'}"
+    table.idempotent_append(_decode_sized(out, n), token)
 
 
-def _decode_sized(subset: DataFrame, n_rows: int | None) -> DataFrame:
-    """Adapt decode parallelism to subset size. A Kafka micro-batch
-    inherits the topic's partitioning, so a small per-id subset spread
-    over 32 partitions pays ~32 Python-task launches (Arrow setup +
-    worker round-trip each) to decode a few hundred rows apiece — the
-    per-task fixed cost dominates the actual decode. When the stats
-    pass's count says the subset is small, COALESCE (shuffle-free: each
-    surviving task reads a few cached partitions locally) down to
-    ceil(n / SPARK_GRAFT_DECODE_ROWS_PER_TASK) tasks so decode batches
-    stay Arrow-efficient. Large subsets keep their full parallelism —
-    at scale the coalesce never fires and no encoded bytes ever move."""
-    if n_rows is None:
-        return subset
-    per_task = int(os.environ.get("SPARK_GRAFT_DECODE_ROWS_PER_TASK", "4096"))
-    if per_task <= 0:
-        return subset
-    n_tasks = max(1, -(-int(n_rows) // per_task))
+def _decode_sized(subset: DataFrame, n: int) -> DataFrame:
+    """The demux's one sizing policy, for every subset it writes (each
+    schema id's decode and both quarantine subsets), from the ``n`` rows
+    the stats pass counted. A Kafka micro-batch inherits the topic's
+    partitioning, so a small subset spread over 32 partitions pays ~32
+    Python-task launches (Arrow setup + worker round-trip each) to
+    decode a few hundred rows apiece — the per-task fixed cost dominates
+    the actual decode — and writes 32 tiny files. When the subset is
+    small, COALESCE (shuffle-free: each surviving task reads a few
+    cached partitions locally) down to ceil(n / DECODE_ROWS_PER_TASK)
+    tasks, so decode batches stay Arrow-efficient and the write lands
+    that many files. Large subsets keep their full parallelism — at
+    scale the coalesce never fires and no bytes ever move."""
+    n_tasks = max(1, -(-n // DECODE_ROWS_PER_TASK))
     if n_tasks >= subset.rdd.getNumPartitions():
         return subset
     return subset.coalesce(n_tasks)
@@ -191,13 +192,15 @@ def demux_decode_batch(
     registry: SchemaRegistry,
     framing: Framing,
     target: ParquetTable,
+    batch_id: int,
     mode: str = "PERMISSIVE",
-    batch_id: int | None = None,
     reader_schema_id: int | str | None = None,
     quarantine: ParquetTable | None = None,
 ) -> list[int | str]:
     """The foreachBatch body, callable on any batch DataFrame (so pytest
     can drive it without a streaming query). Returns schema ids seen.
+    Every write is token'd by ``batch_id``, so a replayed batch
+    overwrites its own output.
 
     ``reader_schema_id`` switches evolution strategy: by default each
     subset lands in the writer's shape and the table union-widens with
@@ -220,19 +223,18 @@ def demux_decode_batch(
     )
     if framing.compression_col is not None:
         sliced = sliced.withColumn("_compression", framing.compression_col)
-    if framing.valid_col is not None:
-        # validity evaluated ONCE into the cached batch (binary substring
-        # comparisons): the stats pass and the per-id decode filters
-        # below read the cached boolean instead of re-evaluating it.
-        # coalesce(false): a NULL Kafka value (tombstone) makes the
-        # length/substring predicate NULL — three-valued logic would
-        # let it slip through BOTH the ~valid quarantine filter and the
-        # bad count-vs-capture bookkeeping (counted bad, never written
-        # anywhere — silent data loss, the exact thing this contract
-        # forbids). Undecodable-by-construction records are bad framing.
-        sliced = sliced.withColumn(
-            "_valid", F.coalesce(framing.valid_col, F.lit(False))
-        )
+    # validity evaluated ONCE into the cached batch (binary substring
+    # comparisons): the stats pass and the per-id decode filters below
+    # read the cached boolean instead of re-evaluating it.
+    # coalesce(false): a NULL Kafka value (tombstone) makes the
+    # length/substring predicate NULL — three-valued logic would let it
+    # slip through BOTH the ~valid quarantine filter and the bad
+    # count-vs-capture bookkeeping (counted bad, never written anywhere
+    # — silent data loss, the exact thing this contract forbids).
+    # Undecodable-by-construction records are bad framing.
+    sliced = sliced.withColumn(
+        "_valid", F.coalesce(framing.valid_col, F.lit(False))
+    )
     cached = sliced  # unpersist target — `sliced` may be rewrapped below
     cached.persist()
     try:
@@ -243,9 +245,6 @@ def demux_decode_batch(
         # separate limit(1).count() probe jobs before the distinct-id
         # job — three cached-batch passes per trigger, which showed up
         # as the avro_demux_events_per_sec slip in BENCH_r04.)
-        valid = (
-            F.col("_valid") if framing.valid_col is not None else F.lit(True)
-        )
         zlib_agg = (
             [
                 F.sum(
@@ -256,7 +255,7 @@ def demux_decode_batch(
             else []
         )
         stats = (
-            cached.groupBy(valid.alias("_valid"), "valueSchemaId")
+            cached.groupBy("_valid", "valueSchemaId")
             .agg(F.count("*").alias("_n"), *zlib_agg)
             .collect()
         )
@@ -265,25 +264,24 @@ def demux_decode_batch(
         ):
             sliced = _inflate_compressed(cached, "_compression")
         n_bad = sum(r["_n"] for r in stats if not r["_valid"])
-        if framing.valid_col is not None:
-            if n_bad:
-                if quarantine is None:
-                    raise RuntimeError(
-                        f"{n_bad} record(s) fail the {framing.name} "
-                        "wire-format check (magic byte / length); pass a "
-                        "quarantine table to capture them instead"
-                    )
-                _quarantine(
-                    sliced.where(~F.col("_valid")),
-                    quarantine,
-                    "bad_framing",
-                    batch_id,
-                    n_rows=n_bad,
+        if n_bad:
+            if quarantine is None:
+                raise RuntimeError(
+                    f"{n_bad} record(s) fail the {framing.name} "
+                    "wire-format check (magic byte / length); pass a "
+                    "quarantine table to capture them instead"
                 )
-                sliced = sliced.where(F.col("_valid"))
-            # the stats pass already proved every row valid on the
-            # common path — no filter to evaluate per decode pass
-            sliced = sliced.drop("_valid")
+            _quarantine(
+                sliced.where(~F.col("_valid")),
+                quarantine,
+                "bad_framing",
+                batch_id,
+                n_bad,
+            )
+            sliced = sliced.where(F.col("_valid"))
+        # the stats pass already proved every row valid on the common
+        # path — no filter to evaluate per decode pass
+        sliced = sliced.drop("_valid")
         # Driver-side demux: distinct ids -> one decode+write pass per id
         # (ingest.scala:139-142). At scale this is N cheap passes over a
         # cached batch, each pruned by the id filter. Already sorted —
@@ -292,7 +290,7 @@ def demux_decode_batch(
             {r["valueSchemaId"] for r in stats if r["_valid"]}, key=str
         )
         # per-id row counts, already paid for by the stats pass — they
-        # feed the sink's write-time file sizing (small-file control)
+        # size each subset's decode and write (_decode_sized)
         n_by_id: dict = {}
         for r in stats:
             if r["_valid"]:
@@ -324,14 +322,14 @@ def demux_decode_batch(
                         quarantine,
                         "unknown_schema_id",
                         batch_id,
+                        n_by_id[sid],
                         sid=sid,
-                        n_rows=n_by_id.get(sid),
                     )
                 )
                 continue
             subset = _decode_sized(
                 sliced.filter(F.col("valueSchemaId") == F.lit(sid)),
-                n_by_id.get(sid),
+                n_by_id[sid],
             )
             decoded = decode_avro(
                 subset,
@@ -341,20 +339,11 @@ def demux_decode_batch(
                 reader_schema_json=reader_json,
             )
             out = decoded.select(*RAW_COLUMNS)
-            if batch_id is not None:
-                jobs.append(
-                    lambda out=out, sid=sid: target.idempotent_append(
-                        out,
-                        token=f"batchid={batch_id}/schemaid={sid}",
-                        n_rows=n_by_id.get(sid),
-                    )
+            jobs.append(
+                lambda out=out, sid=sid: target.idempotent_append(
+                    out, token=f"batchid={batch_id}/schemaid={sid}"
                 )
-            else:
-                jobs.append(
-                    lambda out=out, sid=sid: target.append(
-                        out, n_rows=n_by_id.get(sid)
-                    )
-                )
+            )
         # The per-id jobs touch disjoint outputs (distinct replay-token
         # dirs / quarantine reasons), so they can run CONCURRENTLY:
         # Spark's scheduler interleaves their stages and the fixed
@@ -364,16 +353,8 @@ def demux_decode_batch(
         # append txns to ONE Delta log can conflict, and the log's
         # txnAppId dedup is the idempotence story there.
         spark = batch_df.sparkSession
-        workers = int(os.environ.get("SPARK_GRAFT_DEMUX_PARALLELISM", "4"))
         sequential = (
             len(jobs) < 2
-            or workers < 2
-            # batch_id=None appends go to the SAME table directory and
-            # parquet jobs to one path share <path>/_temporary staging —
-            # the first commit deletes it and silently drops other jobs'
-            # task output. Only the token'd per-(batch,schema) dirs of
-            # the idempotent path are truly disjoint.
-            or batch_id is None
             or target._delta(spark)
             or (quarantine is not None and quarantine._delta(spark))
         )
@@ -383,7 +364,7 @@ def demux_decode_batch(
         else:
             from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(min(workers, len(jobs))) as pool:
+            with ThreadPoolExecutor(min(DEMUX_PARALLELISM, len(jobs))) as pool:
                 for f in [pool.submit(fn) for fn in jobs]:
                     f.result()
     finally:

@@ -263,41 +263,11 @@ class ParquetTable:
                 return True
         return False
 
-    @staticmethod
-    def _sized(df: DataFrame, n_rows: int | None) -> DataFrame:
-        """Write-time small-file control: when the caller already knows
-        the row count (streaming demux plans from a stats pass that has
-        per-subset counts for free), size the output to
-        ceil(n_rows / SPARK_GRAFT_TARGET_FILE_ROWS) files instead of one
-        file per upstream partition. A micro-batch of 25k rows on a
-        32-slot session otherwise writes 32 tiny parquet files per
-        trigger — the classic streaming small-file problem that degrades
-        every downstream scan (file-listing + footer cost per file) and
-        at 100 TB turns a table into millions of kilobyte files.
-
-        ``repartition`` (a shuffle of the about-to-be-written rows), NOT
-        ``coalesce``: coalesce folds upstream and would collapse the
-        Python decode's parallelism; the shuffle moves only the rows
-        being written and is negligible at exactly the sizes where the
-        policy fires. Batches already big enough to fill one file per
-        slot are left alone — no behavior change at scale, and callers
-        that don't know their count (n_rows=None) are untouched."""
-        if n_rows is None:
-            return df
-        target = int(os.environ.get("SPARK_GRAFT_TARGET_FILE_ROWS", "1000000"))
-        if target <= 0:
-            return df
-        n_files = max(1, -(-int(n_rows) // target))
-        if n_files >= df.sparkSession.sparkContext.defaultParallelism:
-            return df
-        return df.repartition(n_files)
-
-    def append(self, df: DataFrame, n_rows: int | None = None) -> None:
+    def append(self, df: DataFrame) -> None:
         """Plain append with evolution-by-mergeSchema-on-read (Delta
         mode: format("delta") with mergeSchema=true, the reference's
         exact sink shape — ingest_raw.scala:145-150, bronze.py:20-27)."""
         self._recover_swap()
-        df = self._sized(df, n_rows)
         if self._delta(df.sparkSession):
             self._delta_write(df, "append", mergeSchema="true")
             return
@@ -306,15 +276,12 @@ class ParquetTable:
             w = w.partitionBy(*self.partition_by)
         w.parquet(self.path)
 
-    def idempotent_append(
-        self, df: DataFrame, token: str, n_rows: int | None = None
-    ) -> None:
+    def idempotent_append(self, df: DataFrame, token: str) -> None:
         """Append keyed by a replay token (e.g. 'batchid=7/schemaid=2'):
         a re-run with the same token overwrites its own output. Delta
         mode maps the token to txnAppId/txnVersion, whose log-level
         dedup is the real transactional form of the same contract."""
         self._recover_swap()
-        df = self._sized(df, n_rows)
         if self._delta(df.sparkSession):
             app_id, version = parse_txn_token(token)
             self._delta_write(

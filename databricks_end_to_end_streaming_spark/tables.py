@@ -78,7 +78,10 @@ def spread_small_scan(df: DataFrame, *keys: str) -> DataFrame:
     is below defaultParallelism; at 100 TB the scan is already parallel
     and this is a no-op with no added exchange. Results are unaffected:
     callers use it under order-insensitive aggregation/explode chains
-    (the minhash_signatures precedent, accepted since r4)."""
+    (the minhash_signatures precedent, accepted since r4). The media
+    operators spread on ``media_id`` before their Python decode passes
+    for the same reason: measured 7.4 s -> ~1 s for the video hash pass
+    at sf0.1."""
     if df.isStreaming:  # micro-batches are already task-sized
         return df
     if os.environ.get("SPARK_GRAFT_NO_SPREAD") == "1":

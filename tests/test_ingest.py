@@ -570,9 +570,9 @@ def test_null_value_tombstone_is_quarantined_not_lost(spark, workdir):
     assert q[0]["quarantineReason"] == "bad_framing"
 
 
-def test_write_time_file_sizing_small_batch(spark, workdir, monkeypatch):
-    """The stats pass's per-id counts feed the sink's write-time file
-    sizing: a small micro-batch lands as ONE parquet file per schema id,
+def test_write_time_file_sizing_small_batch(spark, workdir):
+    """The stats pass's per-id counts size each subset's decode and
+    write: a small micro-batch lands as ONE parquet file per schema id,
     not one per upstream partition (the streaming small-file problem)."""
     import glob as _glob
 
@@ -592,44 +592,85 @@ def test_write_time_file_sizing_small_batch(spark, workdir, monkeypatch):
     # rows all arrived despite the repartition
     assert target.read(spark).count() == 200
 
-    # opt-out: both sizing knobs <=0 restores one-file-per-partition
-    # layout (write sizing AND the adaptive decode coalesce)
-    monkeypatch.setenv("SPARK_GRAFT_TARGET_FILE_ROWS", "0")
-    monkeypatch.setenv("SPARK_GRAFT_DECODE_ROWS_PER_TASK", "0")
-    target2 = ParquetTable(f"{workdir}/raw_unsized")
-    demux_decode_batch(
-        batch, CONFLUENT_REGISTRY, confluent_framing(), target2, batch_id=0
+
+def _job_stages(store, lo: int, hi: int) -> set[int]:
+    """Stage ids of the status store's jobs with lo < job id <= hi."""
+    jobs = store.jobsList(None)  # newest first
+    out: set[int] = set()
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if j.jobId() <= lo:
+            break
+        if j.jobId() <= hi:
+            s = j.stageIds()
+            out |= {s.apply(k) for k in range(s.size())}
+    return out
+
+
+def test_demux_sizes_subsets_without_a_shuffle(spark, workdir, monkeypatch):
+    """The decode coalesce is the demux's only sizing step: past the
+    stats pass, decoding and writing a small two-id batch spread over 16
+    partitions shuffles nothing, and a bad-framing quarantine subset of
+    such a batch still lands as one file."""
+    import glob as _glob
+    from datetime import datetime, timezone
+
+    from py4j.protocol import Py4JJavaError
+
+    from databricks_end_to_end_streaming_spark.sources.files import WIRE_SCHEMA
+    from databricks_end_to_end_streaming_spark.streaming import ingest
+
+    sc = spark.sparkContext._jsc.sc()
+    store = sc.statusStore()
+
+    def last_job_id() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        jobs = store.jobsList(None)  # newest first
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    # the first decode plan is built after the stats pass has run: its
+    # job-id mark separates the stats aggregation from decode + write
+    marks: list[int] = []
+    decode = ingest.decode_avro
+
+    def marking_decode(*args, **kw):
+        if not marks:
+            marks.append(last_job_id())
+        return decode(*args, **kw)
+
+    monkeypatch.setattr(ingest, "decode_avro", marking_decode)
+    batch = wire_df(spark, generate_events(200, seed=42)).repartition(16)
+    start = last_job_id()
+    ids = ingest.demux_decode_batch(
+        batch, CONFLUENT_REGISTRY, confluent_framing(),
+        ParquetTable(f"{workdir}/raw"), batch_id=0,
     )
-    files = _glob.glob(f"{workdir}/raw_unsized/batchid=0/schemaid=1/*.parquet")
-    assert len(files) > 1
+    end = last_job_id()
+    assert ids == [1, 2] and marks and start < marks[0] < end
+    # stages that already ran before the mark (the input repartition,
+    # the stats aggregation) show up again as skipped: exclude them
+    fresh = _job_stages(store, marks[0], end) - _job_stages(store, start, marks[0])
+    shuffled = 0
+    for sid in fresh:
+        try:
+            shuffled += store.lastStageAttempt(sid).shuffleWriteBytes()
+        except Py4JJavaError:  # a stage that never ran
+            continue
+    assert shuffled == 0
 
-
-def test_non_replay_appends_run_sequentially(spark, workdir, monkeypatch):
-    """batch_id=None appends share ONE table directory, and concurrent
-    Spark parquet jobs to one path share <path>/_temporary staging (the
-    first commit deletes it, dropping other jobs' task output). The
-    demux must therefore force the sequential path whenever batch_id is
-    None, even with parallelism configured — only the token'd
-    per-(batch, schema) dirs of the replay path are disjoint."""
-    import threading
-
-    from databricks_end_to_end_streaming_spark.streaming.ingest import (
-        demux_decode_batch,
+    ts = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    rows = [
+        (b"k", b"\xde\xad-not-avro", "t", 0, 100 + i, ts, 0) for i in range(8)
+    ]
+    bad = spark.createDataFrame(rows, WIRE_SCHEMA)
+    mixed = wire_df(spark, generate_events(40, seed=7)).union(bad).repartition(16)
+    quarantine = ParquetTable(f"{workdir}/quarantine")
+    ingest.demux_decode_batch(
+        mixed, CONFLUENT_REGISTRY, confluent_framing(),
+        ParquetTable(f"{workdir}/raw2"), batch_id=0, quarantine=quarantine,
     )
-
-    monkeypatch.setenv("SPARK_GRAFT_DEMUX_PARALLELISM", "8")
-    events = generate_events(30, seed=11)  # ~0.3/0.7 v1/v2 -> 2 write jobs
-    batch = wire_df(spark, events)
-    table = ParquetTable(f"{workdir}/raw")
-    seen_threads: list[str] = []
-    orig_append = table.append
-
-    def recording_append(df, **kw):
-        seen_threads.append(threading.current_thread().name)
-        return orig_append(df, **kw)
-
-    monkeypatch.setattr(table, "append", recording_append)
-    demux_decode_batch(batch, CONFLUENT_REGISTRY, confluent_framing(), table)
-    assert len(seen_threads) == 2  # both schema ids landed
-    assert all(t == threading.main_thread().name for t in seen_threads)
-    assert table.read(spark).count() == 30
+    files = _glob.glob(
+        f"{workdir}/quarantine/batchid=0/reason=bad_framing/sid=any/*.parquet"
+    )
+    assert len(files) == 1, files
+    assert quarantine.read(spark).count() == 8
