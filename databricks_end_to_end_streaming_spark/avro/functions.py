@@ -12,8 +12,8 @@ ingest.scala:162), honoring from_avro's two corrupt-record modes:
 
 Decoding runs inside mapInPandas: rows move JVM->Python once per Arrow
 batch; the per-record decode is the pure-Python codec (codec.py). If a
-spark-avro jar is on the classpath, prefer_jvm=True routes to the native
-from_avro instead.
+spark-avro jar is on the classpath, a decode without a reader schema
+routes to the native from_avro instead.
 """
 
 from __future__ import annotations
@@ -96,7 +96,6 @@ def decode_avro(
     schema_json: str | dict,
     mode: str = "PERMISSIVE",
     output_col: str = "parsedValue",
-    prefer_jvm: bool = True,
     reader_schema_json: str | dict | None = None,
 ) -> DataFrame:
     """Append ``output_col`` struct decoded from the Avro-binary
@@ -116,11 +115,7 @@ def decode_avro(
         schema_json if isinstance(schema_json, str) else json.dumps(schema_json)
     )
     spark = df.sparkSession
-    if (
-        reader_schema_json is None
-        and prefer_jvm
-        and _jvm_from_avro_available(spark)
-    ):
+    if reader_schema_json is None and _jvm_from_avro_available(spark):
         from pyspark.sql.avro.functions import from_avro
 
         return df.withColumn(

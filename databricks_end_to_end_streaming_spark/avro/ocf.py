@@ -4,19 +4,19 @@ The wire paths (Confluent / Glue framing, `avro/functions.py`) cover
 Kafka; OCF covers the other half of the Avro ecosystem: topic archives
 and batch landings are `.avro` FILES (header with embedded writer
 schema + sync-marker-delimited blocks — Apache Avro spec, "Object
-Container Files", public documentation). Built on the same pure-Python
-codec; on a cluster with spark-avro, ``spark.read.format("avro")``
-replaces ``read_avro_files`` with no downstream change.
+Container Files", public documentation).
 
-Scale shape of ``read_avro_files``: ONE small header read on the driver
-(schema discovery — bounded, one file), then Spark's ``binaryFile``
-source distributes whole files to executors and an Arrow-batched
-``mapInPandas`` decodes blocks there. Parallelism is per-file, which is
-the natural granularity for OCF (blocks within a file share one writer
-schema and sync marker). Per-file schemas may differ; each file is
-decoded with its OWN embedded writer schema resolved against the
-driver-discovered reader schema's column set (missing fields -> NULL),
-the same union-widening posture as the parquet tables.
+Two layers:
+
+* ``read_ocf`` / ``write_ocf`` — pure-Python, one file, over the codec
+  in ``codec.py`` (null + deflate). They are the reference
+  implementation the tests and ``bench.py`` compare against.
+* ``read_avro_files`` / ``write_avro_files`` — `.avro` DIRECTORIES
+  through Spark's built-in Avro file format, so rows never leave the
+  JVM. The driver reads ONE header (the first file in sorted order) for
+  the reader schema; each file is then decoded with its own embedded
+  writer schema, and a column the file lacks reads NULL — the same
+  union-widening posture as the parquet tables.
 """
 
 from __future__ import annotations
@@ -25,12 +25,16 @@ import hashlib
 import json
 import os
 import zlib
-from typing import Any, Iterator
 
 from .codec import _build_decoder, _read_varint, _record_type, _write_varint, encode
 
 MAGIC = b"Obj\x01"
 _SUPPORTED_CODECS = ("null", "deflate")
+
+# Spark's built-in Avro file source, named by class: the short name
+# "avro" is only registered by the external spark-avro module, so
+# format("avro") fails with "Failed to find data source: avro".
+AVRO_FORMAT = "org.apache.spark.sql.avro.AvroFileFormat"
 
 
 def _read_block_bytes(buf: bytes, pos: int) -> tuple[bytes, int]:
@@ -91,8 +95,9 @@ def write_ocf(
         f.write(bytes(out))
 
 
-def read_ocf(data: bytes) -> tuple[str, list[dict]]:
-    """Parse one OCF byte string -> (writer schema JSON, records)."""
+def _read_header(data: bytes) -> tuple[dict[str, bytes], int]:
+    """Parse an OCF header's metadata map -> (metadata, position of the
+    sync marker)."""
     if data[:4] != MAGIC:
         raise ValueError("not an Avro object container file (bad magic)")
     pos = 4
@@ -108,6 +113,14 @@ def read_ocf(data: bytes) -> tuple[str, list[dict]]:
             k, pos = _read_block_bytes(data, pos)
             v, pos = _read_block_bytes(data, pos)
             meta[k.decode()] = v
+    if "avro.schema" not in meta:
+        raise ValueError("OCF header missing avro.schema")
+    return meta, pos
+
+
+def read_ocf(data: bytes) -> tuple[str, list[dict]]:
+    """Parse one OCF byte string -> (writer schema JSON, records)."""
+    meta, pos = _read_header(data)
     schema_str = meta["avro.schema"].decode()
     codec = meta.get("avro.codec", b"null").decode()
     if codec not in _SUPPORTED_CODECS:
@@ -134,84 +147,44 @@ def read_ocf(data: bytes) -> tuple[str, list[dict]]:
 
 
 def read_avro_files(spark, path: str):
-    """Distributed `.avro` directory read: driver peeks ONE header for
-    the reader schema, executors decode whole files via mapInPandas."""
-    import pandas as pd
-
+    """Distributed `.avro` directory read: the driver peeks ONE header
+    for the reader schema, Spark's Avro format decodes the files."""
     from .schema import parse_schema, record_to_struct
 
-    first = sorted(
+    files = sorted(
         os.path.join(r, f)
         for r, _d, fs in os.walk(path)
         for f in fs
         if f.endswith(".avro")
     )
-    if not first:
+    if not files:
         raise FileNotFoundError(f"no .avro files under {path}")
-    with open(first[0], "rb") as fh:
-        head = fh.read()
-    reader_schema_str = _header_schema(head)
-    struct = record_to_struct(parse_schema(reader_schema_str))
-    cols = [f.name for f in struct.fields]
-
-    files_df = (
-        spark.read.format("binaryFile")
+    with open(files[0], "rb") as fh:
+        meta, _pos = _read_header(fh.read())
+    struct = record_to_struct(parse_schema(meta["avro.schema"].decode()))
+    return (
+        spark.read.format(AVRO_FORMAT)
+        .schema(struct)
+        .option("pathGlobFilter", "*.avro")
         .load(path)
-        .where("path LIKE '%.avro'")
-        .select("content")
     )
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for blob in pdf["content"]:
-                _schema, recs = read_ocf(bytes(blob))
-                rows += [{c: r.get(c) for c in cols} for r in recs]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files_df.mapInPandas(mapper, schema=struct)
-
-
-def _header_schema(data: bytes) -> str:
-    """Read just the metadata map of an OCF header."""
-    if data[:4] != MAGIC:
-        raise ValueError("not an Avro object container file (bad magic)")
-    pos = 4
-    while True:
-        n, pos = _read_varint(data, pos)
-        if n == 0:
-            break
-        if n < 0:
-            n = -n
-            _size, pos = _read_varint(data, pos)
-        for _ in range(n):
-            k, pos = _read_block_bytes(data, pos)
-            v, pos = _read_block_bytes(data, pos)
-            if k == b"avro.schema":
-                return v.decode()
-    raise ValueError("OCF header missing avro.schema")
 
 
 def write_avro_files(df, path: str, schema_json: str | dict) -> None:
-    """Distributed `.avro` directory EXPORT: each partition writes its
-    own OCF file executor-side (foreachPartition — no driver collect, no
-    shuffle), so exporting a 100 TB table parallelizes like any other
-    write. File names are partition-indexed; re-running overwrites the
-    same names (idempotent for a deterministic upstream plan). Fields
-    not in the schema are dropped; missing nullable fields encode as
-    None via the codec's union handling."""
+    """Distributed `.avro` directory EXPORT through Spark's Avro format:
+    one file per non-empty partition, no driver collect, no shuffle.
+    Re-running replaces the directory. Fields not in the schema are
+    dropped. Deflate is pinned because Spark's default Avro codec is
+    snappy, which ``read_ocf`` cannot decode."""
     schema_str = (
         schema_json if isinstance(schema_json, str) else json.dumps(schema_json)
     )
     field_names = [f["name"] for f in json.loads(schema_str)["fields"]]
-    os.makedirs(path, exist_ok=True)
-
-    def write_partition(it):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        recs = [{n: row[n] for n in field_names} for row in it]
-        if recs:
-            write_ocf(os.path.join(path, f"part-{pid:05d}.avro"), recs, schema_str)
-
-    df.foreachPartition(write_partition)
+    (
+        df.select(*field_names)
+        .write.format(AVRO_FORMAT)
+        .option("avroSchema", schema_str)
+        .option("compression", "deflate")
+        .mode("overwrite")
+        .save(path)
+    )

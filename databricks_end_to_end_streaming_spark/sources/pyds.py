@@ -1,7 +1,7 @@
 """Custom Python data sources (PySpark 4 public DataSource API).
 
-Two sources that close the container's missing-connector-jar gap with
-*driveable* implementations instead of config-only builders:
+One source that closes the container's missing-connector-jar gap with
+a *driveable* implementation instead of a config-only builder:
 
 * ``kafkasim`` — a Kafka-shaped STREAMING (and batch) source over a
   local "broker" directory: one append-only jsonl log per partition,
@@ -16,12 +16,9 @@ Two sources that close the container's missing-connector-jar gap with
   uses the JVM Kafka connector (sources/kafka.py builds those options)
   with executor-side partition planning.
 
-* ``ocf`` — batch reads of Avro object-container files through the
-  pure-Python codec: ``spark.read.format("ocf").load(dir)`` with one
-  input partition PER FILE (executor-parallel, unlike the sequential
-  driver peek), schema inferred from the first file's header.
-
-Both register with ``spark.dataSource.register`` (register_all below).
+It registers with ``spark.dataSource.register`` (register_all below).
+Avro container files need no custom source: ``avro/ocf.py`` reads and
+writes them through Spark's built-in Avro format.
 """
 
 from __future__ import annotations
@@ -329,71 +326,6 @@ class KafkaSimDataSource(DataSource):
         return _KafkaSimWriter(self.options)
 
 
-# ------------------------------------------------------------------ ocf
-
-
-class _OcfReader(DataSourceReader):
-    def __init__(self, options, schema):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("ocf needs .load(<file-or-dir>)")
-        self.fields = [f.name for f in schema.fields]
-
-    def _files(self) -> list[str]:
-        if os.path.isdir(self.path):
-            return sorted(glob.glob(os.path.join(self.path, "*.avro")))
-        return [self.path]
-
-    def partitions(self) -> Sequence[InputPartition]:
-        return [InputPartition(f) for f in self._files()]
-
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        from ..avro.ocf import read_ocf
-
-        with open(partition.value, "rb") as f:
-            _schema_json, records = read_ocf(f.read())
-        for rec in records:
-            yield tuple(rec.get(name) for name in self.fields)
-
-
-class OcfDataSource(DataSource):
-    """``spark.read.format("ocf").load(path)`` over Avro object
-    container files: header schema from the first file, one executor
-    partition per file, records decoded by the pure-Python codec."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "ocf"
-
-    def schema(self):
-        from ..avro.ocf import read_ocf
-        from ..avro.schema import avro_to_spark_type
-
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("ocf needs .load(<file-or-dir>)")
-        files = (
-            sorted(glob.glob(os.path.join(path, "*.avro")))
-            if os.path.isdir(path)
-            else [path]
-        )
-        if not files:
-            raise ValueError(f"no .avro files under {path}")
-        with open(files[0], "rb") as f:
-            schema_json, _ = read_ocf(f.read())
-        avsc = json.loads(schema_json)
-        return T.StructType(
-            [
-                T.StructField(fl["name"], avro_to_spark_type(fl["type"]))
-                for fl in avsc["fields"]
-            ]
-        )
-
-    def reader(self, schema) -> DataSourceReader:
-        return _OcfReader(self.options, schema)
-
-
 def register_all(spark) -> None:
     """Idempotent registration of every custom source."""
     spark.dataSource.register(KafkaSimDataSource)
-    spark.dataSource.register(OcfDataSource)

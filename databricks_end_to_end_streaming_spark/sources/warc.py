@@ -284,8 +284,8 @@ def write_warc_segments(
     group's records in doc_id order. Bytes are deterministic (fixed
     date, doc_id-derived record ids, gzip mtime=0), so re-synthesis of
     the same relation reproduces identical files. Returns the number of
-    segments written. The write is the ocf.py posture: per-group
-    executor work, no driver collect, no shuffle beyond the group-by."""
+    segments written. Per-group executor work, no driver collect, no
+    shuffle beyond the group-by."""
     import pandas as pd
 
     os.makedirs(path, exist_ok=True)

@@ -1,5 +1,6 @@
 """Avro Object Container Files: byte-level round-trip (both codecs,
-multi-block), corruption detection, and the distributed directory read."""
+multi-block), corruption detection, and the distributed directory read
+and export through Spark's Avro format, checked against the reference."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import json
 import pytest
 
 from databricks_end_to_end_streaming_spark.avro.ocf import (
+    AVRO_FORMAT,
     read_avro_files,
     read_ocf,
     write_ocf,
@@ -110,3 +112,86 @@ def test_write_avro_files_roundtrip(spark, workdir):
     back = read_avro_files(spark, f"{workdir}/export")
     got = sorted((r["id"], r["kind"]) for r in back.collect())
     assert got == sorted((i, f"k{i % 3}") for i in range(500))
+
+
+def _records_df(spark):
+    return spark.createDataFrame(
+        [(r["id"], r["kind"], r["score"]) for r in RECORDS],
+        "id long, kind string, score double",
+    ).repartition(3)
+
+
+def test_read_avro_files_snappy(spark, workdir):
+    """Spark's Avro writer defaults to snappy, which the reference codec
+    rejects; the directory read still decodes it."""
+    import os
+
+    src = _records_df(spark)
+    path = f"{workdir}/snappy"
+    src.write.format(AVRO_FORMAT).save(path)
+    first = sorted(f for f in os.listdir(path) if f.endswith(".avro"))[0]
+    with pytest.raises(ValueError, match="snappy"):
+        read_ocf(open(f"{path}/{first}", "rb").read())
+
+    back = read_avro_files(spark, path)
+    assert back.columns == ["id", "kind", "score"]
+    assert sorted(back.collect()) == sorted(src.collect())
+
+
+def test_read_avro_files_plan_has_no_python(spark, workdir):
+    import os
+
+    os.makedirs(f"{workdir}/plan")
+    write_ocf(f"{workdir}/plan/part-0.avro", RECORDS[:20], SCHEMA)
+    df = read_avro_files(spark, f"{workdir}/plan")
+    assert df.count() == 20
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan and "Python" not in plan
+
+
+def test_write_avro_files_readable_by_reference(spark, workdir):
+    """Every exported file decodes with the pure-Python reader, so the
+    export codec stays one the reference implementation supports."""
+    import os
+
+    from databricks_end_to_end_streaming_spark.avro.ocf import write_avro_files
+
+    src = _records_df(spark)
+    path = f"{workdir}/export_ref"
+    write_avro_files(src, path, SCHEMA)
+
+    files = sorted(f for f in os.listdir(path) if f.endswith(".avro"))
+    assert files
+    got = []
+    for f in files:
+        _schema, recs = read_ocf(open(f"{path}/{f}", "rb").read())
+        got += recs
+    assert sorted(got, key=lambda r: r["id"]) == RECORDS
+
+
+def test_read_avro_files_older_files_read_null(spark, workdir):
+    """Files written with an older schema read NULL for the columns the
+    first file's (newer) schema adds; each file keeps its own codec."""
+    import os
+
+    old_schema = json.dumps(
+        {
+            "type": "record",
+            "name": "ev",
+            "fields": [
+                {"name": "id", "type": "long"},
+                {"name": "kind", "type": "string"},
+            ],
+        }
+    )
+    old = [{"id": 1000 + i, "kind": "old"} for i in range(30)]
+    os.makedirs(f"{workdir}/mixed")
+    write_ocf(f"{workdir}/mixed/a-new.avro", RECORDS[:50], SCHEMA, codec="deflate")
+    write_ocf(f"{workdir}/mixed/b-old.avro", old, old_schema)
+    df = read_avro_files(spark, f"{workdir}/mixed")
+    got = sorted((r["id"], r["kind"], r["score"]) for r in df.collect())
+    want = sorted(
+        [(r["id"], r["kind"], r["score"]) for r in RECORDS[:50]]
+        + [(r["id"], r["kind"], None) for r in old]
+    )
+    assert got == want

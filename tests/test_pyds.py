@@ -1,7 +1,6 @@
 """Custom Python data sources (sources/pyds.py): the kafkasim streaming
 source drives real Structured Streaming offset semantics (S1/S2 without
-a broker or connector jar), and the ocf batch source reads object
-container files executor-parallel."""
+a broker or connector jar)."""
 
 from __future__ import annotations
 
@@ -10,10 +9,6 @@ import os
 
 import pytest
 
-from databricks_end_to_end_streaming_spark.avro.ocf import (
-    read_avro_files,
-    write_avro_files,
-)
 from databricks_end_to_end_streaming_spark.registry import InMemorySchemaRegistry
 from databricks_end_to_end_streaming_spark.schemas import (
     PRODUCT_V1_JSON,
@@ -141,33 +136,6 @@ def test_kafkasim_feeds_the_ingest_demux(sim, workdir):
     # v1 rows read NULL for v2-only columns (evolution contract, T9)
     assert flat.where("size is null").count() > 0
     assert flat.where("size is not null").count() > 0
-
-
-def test_ocf_datasource_roundtrip(sim, workdir):
-    src = sim.createDataFrame(
-        [(i, f"name{i}", float(i) / 4) for i in range(100)],
-        "id long, name string, score double",
-    )
-    path = f"{workdir}/ocf_dir"
-    schema = {
-        "type": "record",
-        "name": "rec",
-        "fields": [
-            {"name": "id", "type": "long"},
-            {"name": "name", "type": "string"},
-            {"name": "score", "type": "double"},
-        ],
-    }
-    write_avro_files(src.repartition(3), path, schema)
-    via_ds = sim.read.format("ocf").load(path)
-    assert via_ds.schema.simpleString() == "struct<id:bigint,name:string,score:double>"
-    assert sorted(r["id"] for r in via_ds.collect()) == list(range(100))
-    # agrees with the mapInPandas reader
-    via_mip = read_avro_files(sim, path)
-    assert sorted(map(str, via_ds.collect())) == sorted(map(str, via_mip.collect()))
-    # one input partition per file -> executor-parallel scan
-    n_files = len([f for f in os.listdir(path) if f.endswith(".avro")])
-    assert via_ds.rdd.getNumPartitions() == n_files
 
 
 def test_kafkasim_drives_full_medallion_dag(sim, workdir):
