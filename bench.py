@@ -716,11 +716,11 @@ def _bench_sf1(spark, sf_dir: str, k: int = 10) -> dict:
 
 
 def _bench_avro_demux(spark, n_events: int = 50_000) -> dict:
-    """Microbenchmark of the pure-Python Avro demux-decode path — the one
-    environment stand-in with real per-record Python cost (no spark-avro
-    jar here, so decode_avro falls back to the Arrow-batched Python codec
-    inside mapInPandas). Measured so the cost is a number, not a guess:
-    on a jar-equipped cluster the JVM from_avro path replaces it.
+    """Microbenchmark of the ingest demux: slice, per-schema-id decode and
+    raw write of one batch. The decode runs in the JVM decoder
+    (avro/AvroWireDecode.java) wherever ``javac`` built it, else in the
+    Python codec inside mapInPandas; ``avro_demux_python_decode_sec``
+    keeps its name from the rounds that measured only the latter.
     Reported under "extras" (NOT in "queries") so the headline total
     stays apples-to-apples with prior rounds."""
     import shutil

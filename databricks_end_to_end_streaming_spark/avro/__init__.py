@@ -1,17 +1,19 @@
 """Avro support without the spark-avro connector.
 
 The reference decodes Kafka Avro payloads with Spark's `from_avro`
-(ingest_raw.scala:144, ingest.scala:162). This environment has no
-spark-avro jar, so the engine ships a pure-Python Avro *binary* codec
-(avro binary encoding is a simple varint/length-prefix format, spec:
-https://avro.apache.org/docs/current/specification/) plus an
-Arrow-batched `functions.decode_avro` that decodes inside `mapInPandas` —
-rows cross the JVM/Python boundary once per batch, not per row.
+(ingest_raw.scala:144, ingest.scala:162), which lives in the spark-avro
+module this environment lacks. Avro's own Java library ships with Spark
+anyway, so `functions.decode_avro` decodes in the JVM through a small
+checked-in Java UDF (`AvroWireDecode.java`, a `GenericDatumReader` per
+task). `session.py` compiles it with the installed `javac` once per
+cache entry and puts the jar on `spark.jars`.
 
-On a cluster with spark-avro available, `decode_avro` routes to the JVM
-`from_avro` instead, when its probe `_jvm_from_avro_available` resolves
-and no reader schema is asked for. Avro container files (`ocf.py`) go
-through Spark's built-in Avro file format.
+The pure-Python Avro *binary* codec (`codec.py`; the binary encoding is
+a simple varint/length-prefix format, spec:
+https://avro.apache.org/docs/current/specification/) is the decoder's
+test oracle and its fallback: without `javac`, `decode_avro` runs the
+codec inside `mapInPandas`, Arrow-batched. Avro container files
+(`ocf.py`) go through Spark's built-in Avro file format.
 """
 
 from .codec import decode, encode

@@ -4,8 +4,10 @@ Implements the Avro binary encoding from the public spec
 (https://avro.apache.org/docs/current/specification/#binary-encoding):
 zig-zag varint ints/longs, little-endian IEEE float/double,
 length-prefixed bytes/string, index-prefixed unions, block-encoded
-arrays/maps. This replaces the spark-avro jar (absent here); the hot
-path wraps it in Arrow-batched mapInPandas (see functions.py).
+arrays/maps. The reference implementation the JVM decoder
+(AvroWireDecode.java) is tested against, and decode_avro's fallback
+inside Arrow-batched mapInPandas when that decoder is not built (see
+functions.py).
 
 Deliberately schema-driven and allocation-light: decoders are composed
 closures built once per schema, then applied per record.

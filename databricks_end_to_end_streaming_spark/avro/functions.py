@@ -1,4 +1,4 @@
-"""`from_avro` equivalent over Arrow batches.
+"""`from_avro` equivalent: decode an Avro-binary column into a struct.
 
 `decode_avro(df, payload_col, schema_json, mode)` appends the decoded
 record as a struct column (default name `parsedValue`, matching the
@@ -10,10 +10,18 @@ ingest.scala:162), honoring from_avro's two corrupt-record modes:
 * FAILFAST (ingest.scala:129-131): malformed payload -> the task (and
   the streaming query) fails.
 
-Decoding runs inside mapInPandas: rows move JVM->Python once per Arrow
-batch; the per-record decode is the pure-Python codec (codec.py). If a
-spark-avro jar is on the classpath, a decode without a reader schema
-routes to the native from_avro instead.
+The decode runs in the JVM. `AvroWireDecode.java` (next to this file)
+is a Java UDF over Avro's own `GenericDatumReader`, from the
+`avro-*.jar` Spark already ships; `session.py` compiles it once per
+cache entry and puts the jar on `spark.jars`. `decode_avro` builds the
+column from its static `udf(...)` factory, unnamed, so it also resolves
+in the cloned session a foreachBatch body runs in. The plan holds no
+Python node and no Python worker starts.
+
+When the class does not resolve (no `javac` where the session was
+built), `decode_avro` decodes with the pure-Python codec (codec.py)
+inside `mapInPandas`: rows move JVM->Python once per Arrow batch. That
+codec is also the reference the JVM decoder is tested against.
 """
 
 from __future__ import annotations
@@ -23,33 +31,22 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from .schema import parse_schema, record_to_struct
 
+_DECODER_CLASS = "databricks_end_to_end_streaming_spark.avro.AvroWireDecode"
 
-_JVM_AVRO_OK: bool | None = None
 
+def _jvm_decoder(spark):
+    """The compiled decoder class, or None when it is not on this
+    session's classpath. One py4j lookup per call, so nothing outlives
+    the SparkContext it was asked of."""
+    from py4j.java_gateway import JavaClass
 
-def _jvm_from_avro_available(spark) -> bool:
-    """True iff the native from_avro actually resolves — probed by
-    analyzing (not executing) a one-row plan, since the Python wrapper
-    exists even when the spark-avro data source isn't loaded."""
-    global _JVM_AVRO_OK
-    if _JVM_AVRO_OK is None:
-        try:
-            from pyspark.sql.avro.functions import from_avro
-
-            probe = spark.createDataFrame([(b"\x02",)], "b binary").select(
-                from_avro(F.col("b"), '{"type": "long"}')
-            )
-            probe.schema  # forces analysis; raises if avro not loaded
-            _JVM_AVRO_OK = True
-        except Exception:
-            _JVM_AVRO_OK = False
-    return _JVM_AVRO_OK
+    cls = getattr(spark._jvm, _DECODER_CLASS)
+    return cls if isinstance(cls, JavaClass) else None
 
 
 def encode_avro(
@@ -62,10 +59,7 @@ def encode_avro(
     into an Avro-binary column (Arrow-batched). The distributed form of
     the reference producers' per-record serialization
     (producer.scala:132-155, producer.py:126-149)."""
-    schema_str = (
-        schema_json if isinstance(schema_json, str) else json.dumps(schema_json)
-    )
-    schema_dict = json.loads(schema_str)
+    schema_dict = json.loads(_json_str(schema_json))
     names = field_cols or [f["name"] for f in schema_dict["fields"]]
     out_schema = T.StructType(
         list(df.schema.fields) + [T.StructField(output_col, T.BinaryType(), True)]
@@ -107,47 +101,42 @@ def decode_avro(
     taking their declared defaults — the registry-compatibility behavior
     Glue ``FULL`` implies (producer.scala:60-61). Without it, the decoded
     struct is the writer's shape and evolution is handled downstream by
-    union-widening with NULLs (SURVEY T9). Resolution always uses the
-    Python codec — the JVM from_avro takes one schema only."""
+    union-widening with NULLs (SURVEY T9). Both paths (module docstring)
+    resolve the same way."""
     if mode not in ("PERMISSIVE", "FAILFAST"):
         raise ValueError(f"mode must be PERMISSIVE or FAILFAST, got {mode!r}")
-    schema_str = (
-        schema_json if isinstance(schema_json, str) else json.dumps(schema_json)
-    )
+    schema_str = _json_str(schema_json)
+    reader_str = None if reader_schema_json is None else _json_str(reader_schema_json)
+    struct_type = record_to_struct(parse_schema(reader_str or schema_str))
+    failfast = mode == "FAILFAST"
     spark = df.sparkSession
-    if reader_schema_json is None and _jvm_from_avro_available(spark):
-        from pyspark.sql.avro.functions import from_avro
+    decoder = _jvm_decoder(spark)
+    if decoder is not None:
+        from pyspark.sql.classic.column import Column, _to_java_column, _to_seq
 
-        return df.withColumn(
-            output_col,
-            from_avro(F.col(payload_col), schema_str, {"mode": mode}),
+        judf = decoder.udf(
+            schema_str,
+            reader_str,
+            failfast,
+            spark._jsparkSession.parseDataType(struct_type.json()),
         )
+        cols = _to_seq(spark.sparkContext, [payload_col], _to_java_column)
+        return df.withColumn(output_col, Column(judf.apply(cols)))
 
-    schema_dict = json.loads(schema_str)
-    if reader_schema_json is not None:
+    if reader_str is not None:
         from .codec import reader_for
 
-        reader_str = (
-            reader_schema_json
-            if isinstance(reader_schema_json, str)
-            else json.dumps(reader_schema_json)
-        )
-        reader_parsed = parse_schema(reader_str)
-        struct_type = record_to_struct(reader_parsed)
-        read_record = reader_for(parse_schema(schema_str), reader_parsed)
+        read_record = reader_for(parse_schema(schema_str), parse_schema(reader_str))
     else:
         from .codec import decoder_for
 
-        struct_type = record_to_struct(parse_schema(schema_str))
-        # resolve the decoder ONCE: decode() re-stringifies the schema
-        # dict for its cache key on every call, which is measurable at
-        # per-record frequency
-        read_record = decoder_for(schema_dict)
+        # resolve the decoder ONCE: decode() does its cache lookup on
+        # every call, which is measurable at per-record frequency
+        read_record = decoder_for(schema_str)
     field_names = [f.name for f in struct_type.fields]
     out_schema = T.StructType(
         list(df.schema.fields) + [T.StructField(output_col, struct_type, True)]
     )
-    failfast = mode == "FAILFAST"
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -165,3 +154,7 @@ def decode_avro(
             yield out
 
     return df.mapInPandas(mapper, out_schema)
+
+
+def _json_str(schema: str | dict) -> str:
+    return schema if isinstance(schema, str) else json.dumps(schema)

@@ -28,6 +28,15 @@ cluster:
   precondition is the one the log always had: one writer per checkpoint
   and a filesystem with atomic rename. Object stores lack the latter;
   there the Delta log (which keeps its own log store) replaces it.
+* The JVM Avro decoder (``avro/AvroWireDecode.java``) on ``spark.jars``.
+  The engine ships the Java source, not a jar: ``_decoder_jar`` compiles
+  it with the installed ``javac`` against Spark's own jars ONCE per cache
+  entry, named by the source's sha256 and the pyspark version, under the
+  per-user cache directory (``$XDG_CACHE_HOME`` or ``~/.cache``, never
+  ``TMPDIR``, which a caller may point at a per-run work dir). The
+  compile costs seconds of CPU; once the jar exists, every later session
+  pays one ``stat``. Without ``javac``, or when the compile fails, no jar
+  is added and ``decode_avro`` keeps its Python codec path.
 * UTC session timezone so TIMESTAMP semantics match the DuckDB oracle.
 * `nanosAsLong` because the driver's `events.parquet` carries
   TIMESTAMP(NANOS), which Spark has no native type for; `tables.py`
@@ -36,8 +45,16 @@ cluster:
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
+from pathlib import Path
 
+import pyspark
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -62,6 +79,49 @@ def _default_driver_mem() -> str:
         return f"{max(2, min(12, int(total_gib * 0.7)))}g"
     except (ValueError, OSError, AttributeError):
         return "4g"
+
+
+_DECODER_SOURCE = Path(__file__).parent / "avro" / "AvroWireDecode.java"
+
+
+@functools.cache
+def _decoder_key() -> str:
+    source = _DECODER_SOURCE.read_bytes()
+    return hashlib.sha256(source + pyspark.__version__.encode()).hexdigest()[:16]
+
+
+def _decoder_jar() -> str | None:
+    """Path of the compiled JVM Avro decoder, building it on the first
+    call per cache entry; None when it cannot be built (module
+    docstring). The jar is written under a temporary name and renamed
+    into place, so concurrent first sessions never see a partial jar."""
+    cache = Path(os.environ.get("XDG_CACHE_HOME") or Path.home() / ".cache")
+    jar = cache / "spark-graft" / f"avro-wire-decode-{_decoder_key()}.jar"
+    if jar.exists():
+        return str(jar)
+    javac = shutil.which("javac")
+    if javac is None:
+        return None
+    from pyspark.find_spark_home import _find_spark_home
+
+    classpath = os.path.join(_find_spark_home(), "jars", "*")
+    try:
+        with tempfile.TemporaryDirectory() as out:
+            subprocess.run(
+                [javac, "--release", "17", "-nowarn", "-cp", classpath,
+                 "-d", out, str(_DECODER_SOURCE)],
+                check=True,
+                capture_output=True,
+            )
+            jar.parent.mkdir(parents=True, exist_ok=True)
+            part = jar.with_name(f"{jar.name}.{os.getpid()}.part")
+            with zipfile.ZipFile(part, "w") as zf:
+                for cls in Path(out).rglob("*.class"):
+                    zf.write(cls, cls.relative_to(out).as_posix())
+            os.replace(part, jar)
+    except (OSError, subprocess.CalledProcessError):
+        return None
+    return str(jar)
 
 
 def session_conf(
@@ -108,6 +168,9 @@ def session_conf(
         # Local runs: don't spin up the UI.
         "spark.ui.enabled": os.environ.get("SPARK_GRAFT_UI", "false"),
     }
+    jar = _decoder_jar()
+    if jar is not None:
+        conf["spark.jars"] = jar
     if extra_conf:
         conf.update(extra_conf)
     return conf

@@ -172,15 +172,14 @@ def _decode_sized(subset: DataFrame, n: int) -> DataFrame:
     """The demux's one sizing policy, for every subset it writes (each
     schema id's decode and both quarantine subsets), from the ``n`` rows
     the stats pass counted. A Kafka micro-batch inherits the topic's
-    partitioning, so a small subset spread over 32 partitions pays ~32
-    Python-task launches (Arrow setup + worker round-trip each) to
-    decode a few hundred rows apiece — the per-task fixed cost dominates
-    the actual decode — and writes 32 tiny files. When the subset is
-    small, COALESCE (shuffle-free: each surviving task reads a few
-    cached partitions locally) down to ceil(n / DECODE_ROWS_PER_TASK)
-    tasks, so decode batches stay Arrow-efficient and the write lands
-    that many files. Large subsets keep their full parallelism — at
-    scale the coalesce never fires and no bytes ever move."""
+    partitioning, so a small subset spread over 32 partitions writes 32
+    tiny files (and, on the Python-codec fallback of decode_avro, pays
+    ~32 Python-task launches to decode a few hundred rows apiece). When
+    the subset is small, COALESCE (shuffle-free: each surviving task
+    reads a few cached partitions locally) down to
+    ceil(n / DECODE_ROWS_PER_TASK) tasks, so the write lands that many
+    files. Large subsets keep their full parallelism — at scale the
+    coalesce never fires and no bytes ever move."""
     n_tasks = max(1, -(-n // DECODE_ROWS_PER_TASK))
     if n_tasks >= subset.rdd.getNumPartitions():
         return subset

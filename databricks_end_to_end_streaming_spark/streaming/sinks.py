@@ -41,8 +41,7 @@ def delta_available(spark: SparkSession) -> bool:
     """True iff OSS delta-spark is usable in THIS session: the Python
     package imports, the JVM class is on the classpath, and the session
     was built with the Delta extension + catalog (without which writes
-    analyze but commits fail). Probed once per process, like
-    ``avro.functions._jvm_from_avro_available``. The
+    analyze but commits fail). Probed once per process. The
     SPARK_GRAFT_TABLE_FORMAT env var overrides: ``parquet`` forces the
     stand-in, ``delta`` asserts Delta must be present."""
     forced = os.environ.get("SPARK_GRAFT_TABLE_FORMAT", "").lower()

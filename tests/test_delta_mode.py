@@ -4,7 +4,7 @@ The probe itself, the token->txn mapping, and the forced-parquet
 override are exercised in every environment; the Delta-backed contract
 tests run only where OSS delta-spark is installed (skip-marked here —
 this container ships no delta jars), mirroring how the Pillow media
-tests and the JVM from_avro probe are gated.
+tests are gated.
 """
 
 from __future__ import annotations
