@@ -96,10 +96,6 @@ def avro_to_spark_type(avro_type: Any) -> T.DataType:
     raise ValueError(f"unsupported avro type: {avro_type!r}")
 
 
-def _nullable(avro_type: Any) -> bool:
-    return isinstance(avro_type, list) and "null" in avro_type
-
-
 def record_to_struct(schema: RecordSchema) -> T.StructType:
     """RecordSchema -> StructType. All fields are nullable in the Spark
     struct (matching from_avro's PERMISSIVE posture, where a corrupt

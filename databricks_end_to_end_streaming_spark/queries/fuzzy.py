@@ -205,9 +205,7 @@ def jw_name_candidates(names: DataFrame) -> DataFrame:
     """Dictionary-level JW candidate pairs: token-blocked (must share a
     whole name token) then pruned by the theorem-recall-free
     length-ratio bound 4*min(ls,lt) >= max(ls,lt) (derivation in the
-    jaro_winkler_part_pairs docstring). Shared by the query and the
-    dictionary-scaling probe (tools/jw_dict_probe.py) so the probe
-    counts exactly the relation the query scores.
+    jaro_winkler_part_pairs docstring).
 
     PRODUCTION CAVEAT (r11 ADVICE): unlike the length-ratio prune,
     whole-token blocking is only EMPIRICALLY recall-free — the
@@ -367,7 +365,7 @@ def jaro_winkler_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on (name, brand, size) — the quadratic (brand,size)
     block join of rounds <=10 is gone, so candidate work grows with
     the dictionary's block structure, not quadratically in the part
-    count (probe: tools/jw_dict_probe.py, recorded in README)."""
+    count (dictionary-scaling figures recorded in README)."""
     from ..operators.jaro import (
         jw_match_state,
         jw_score_from_state,

@@ -39,11 +39,6 @@ def write_topic_files(
     df.repartition(n_files).write.mode("append").parquet(path)
 
 
-def file_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def file_stream(spark: SparkSession, path: str) -> DataFrame:
     """readStream over a parquet topic directory (Kafka drop-in)."""
-    reader = spark.readStream.schema(WIRE_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(path)
+    return spark.readStream.schema(WIRE_SCHEMA).parquet(path)

@@ -43,7 +43,7 @@ from ..operators.bloom import (
 )
 from ..pin import pin
 from .medallion import drain, foreach_writer
-from .sinks import ParquetTable, batch_id_col, batch_token, exclude_batch
+from .sinks import ParquetTable, batch_token
 
 BLOOM_M_BITS = 1 << 20
 
@@ -102,34 +102,17 @@ def bloom_dedup_batch(
             # emitted twice), so merge back every fp batch newer than
             # the bitmap's recorded watermark. The current batch is
             # excluded: its bits merge at the end, and the exact check
-            # already ignores its own half-written rows. Replay filters
-            # use batch_id_col — the partition column in parquet mode
-            # (pruned; zero partitions match on the no-crash path), the
-            # explicit _batch_id data column in Delta mode.
-            fps = fp_table.read(spark)
-            try:
-                bcol = batch_id_col(fps)
-                not_own = ~bcol.eqNullSafe(F.lit(batch_id))
-                if merged_through is None:
-                    # no watermark (no bitmap, or one written before the
-                    # watermark existed): conservatively rebuild from all
-                    # strictly-other fp batches — one-time O(corpus)
-                    # recovery
-                    newer = not_own
-                else:
-                    # legacy NULL-batch rows (pre-_batch_id writes seen
-                    # through mergeSchema) can't be dated against the
-                    # watermark — include them; a redundant merge is
-                    # harmless, a missed one is a false-negative hole
-                    newer = (
-                        bcol.isNull() | (bcol > merged_through)
-                    ) & not_own
-                missing = fps.where(newer).select("fp")
-            except ValueError:
-                # legacy fp table with no batch column at all: no
-                # current-release rows exist, so nothing is "own";
-                # conservatively rebuild from everything
-                missing = fps.select("fp")
+            # already ignores its own half-written rows. Without a
+            # watermark (no bitmap, or one written before it existed)
+            # every older batch merges back: a one-time O(corpus)
+            # recovery. An unstamped (NULL) row can't be dated against
+            # the watermark, so it is included: a redundant merge is
+            # harmless, a missed one is a false-negative hole.
+            prior = fp_table.read(spark, up_to_batch=batch_id - 1)
+            if merged_through is not None:
+                stamp = F.col("_batch_id")
+                prior = prior.where(stamp.isNull() | (stamp > merged_through))
+            missing = prior.select("fp")
             if not missing.isEmpty():
                 rebuilt = bloom_build(missing, "fp", m_bits)
                 bitmap = (
@@ -148,13 +131,12 @@ def bloom_dedup_batch(
                 n_fresh = fresh.count()
                 n_maybe = maybe.count()
                 if n_maybe and fp_table.exists():
-                    # Replay-safe: compare against strictly other batches
+                    # Replay-safe: compare against strictly older batches
                     # only, so a replayed batch cannot anti-join away its
-                    # own half-written fingerprints. batch_id_col works
-                    # in both storage modes (Delta has no batchid
-                    # partition directories).
-                    hist = fp_table.read(spark)
-                    seen = exclude_batch(hist, batch_id, fp_table.path).select("fp")
+                    # own half-written fingerprints.
+                    seen = fp_table.read(
+                        spark, up_to_batch=batch_id - 1
+                    ).select("fp")
                     survivors = maybe.join(seen, on="fp", how="left_anti")
                 else:
                     survivors = maybe

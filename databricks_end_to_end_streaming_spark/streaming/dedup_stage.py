@@ -31,7 +31,7 @@ from ..queries.dedup import (
 )
 from ..pin import pin
 from .medallion import drain, foreach_writer
-from .sinks import LOG_COLUMNS, ParquetTable, exclude_batch
+from .sinks import LOG_COLUMNS, ParquetTable
 
 
 def neardup_batch(
@@ -88,14 +88,9 @@ def neardup_batch(
         # new ids, the accumulated docs table for seen ids. A REPLAYED
         # batch already has its docs in the table (written at the end of
         # the first attempt), so exclude its own rows — a duplicate doc
-        # row would duplicate every pair it verifies. batch_id_col picks
-        # the `batchid` partition column in parquet mode (the exclusion
-        # is partition-pruned, not a scan filter) and the explicit
-        # `_batch_id` data column in Delta mode, where token directories
-        # don't exist.
+        # row would duplicate every pair it verifies.
         if docs_table.exists():
-            hist = docs_table.read(spark)
-            prior = exclude_batch(hist, batch_id, docs_table.path)
+            prior = docs_table.read(spark, up_to_batch=batch_id - 1)
             corpus = prior.drop(*LOG_COLUMNS).unionByName(
                 batch_df, allowMissingColumns=True
             )
@@ -105,8 +100,6 @@ def neardup_batch(
 
         pairs_table.append_batch(pairs, batch_id, "pairs")
         bands_table.append_batch(new_bands, batch_id, "bands")
-        # docs carry an explicit _batch_id so the replay exclusion above
-        # works in Delta mode too (no token partition dirs there)
         docs_table.append_batch(batch_df, batch_id, "docs")
     finally:
         batch_df.unpersist()

@@ -72,7 +72,7 @@ from ..operators.suffix import (
 )
 from ..pin import pin
 from .medallion import drain, foreach_writer
-from .sinks import ParquetTable, exclude_batch
+from .sinks import ParquetTable
 
 DEFAULT_MIN_LEN = 8
 
@@ -102,14 +102,12 @@ def exact_substr_batch(
             # index rows flow on. Their window strings are re-sliced
             # from the stored docs (per-doc grouped fetch) so equality
             # is decided on tokens, never on the 64-bit hash.
-            seen = exclude_batch(
-                gram_table.read(spark), batch_id, gram_table.path
-            )
+            seen = gram_table.read(spark, up_to_batch=batch_id - 1)
             old_occ = seen.join(
                 F.broadcast(new_occ.select("h").distinct()), "h"
             ).select("doc_id", "off")
-            old_docs = exclude_batch(
-                docs_table.read(spark), batch_id, docs_table.path
+            old_docs = docs_table.read(
+                spark, up_to_batch=batch_id - 1
             ).select("doc_id", text_col)
             need = old_docs.join(
                 old_occ.select("doc_id").distinct(), "doc_id"
@@ -150,9 +148,9 @@ def exact_substr_batch(
             # would fold away anyway, but re-emitting every prior cut
             # each batch grows the log quadratically on hot spans
             covered = covered.join(
-                exclude_batch(
-                    cuts_table.read(spark), batch_id, cuts_table.path
-                ).select("doc_id", "off"),
+                cuts_table.read(spark, up_to_batch=batch_id - 1).select(
+                    "doc_id", "off"
+                ),
                 ["doc_id", "off"],
                 "left_anti",
             )

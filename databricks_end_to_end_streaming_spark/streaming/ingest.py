@@ -198,8 +198,8 @@ def demux_decode_batch(
 ) -> list[int | str]:
     """The foreachBatch body, callable on any batch DataFrame (so pytest
     can drive it without a streaming query). Returns schema ids seen.
-    Every write is token'd by ``batch_id``, so a replayed batch
-    overwrites its own output.
+    Every write is token'd by ``batch_id``, so a replayed batch keeps
+    the tokens it already committed and rewrites only partial ones.
 
     ``reader_schema_id`` switches evolution strategy: by default each
     subset lands in the writer's shape and the table union-widens with
@@ -463,7 +463,7 @@ def replay_quarantined(
     still fail (bad framing, still-unknown ids) stay quarantined.
 
     Protocol: rows replay under ``replay_batch_id`` replay tokens, so
-    re-running a replay overwrites itself instead of double-appending
+    re-running a replay keeps what it committed instead of double-appending
     (give each distinct replay wave its own id). The residual is staged
     beside the quarantine and swapped in with the same aside protocol as
     upsert/compact — a crash leaves either the old or the new dead-letter

@@ -506,9 +506,13 @@ def run_pipeline_continuous(
     never runs. Each downstream stage starts only after its upstream
     committed one non-empty batch, because ``ParquetTable.stream`` pins
     its schema from a batch read of an EXISTING table. The cascade is
-    exactly-once end to end: every file source reads its upstream's
+    exactly-once end to end. Silver and gold read their upstream's
     ``_spark_metadata`` commit log, so uncommitted files of an in-flight
-    trigger are invisible downstream.
+    trigger are invisible downstream. Bronze reads raw's token
+    directories, which have no such log: Spark's job commit makes each
+    token's files visible at once, and a replayed ingest batch keeps a
+    committed token's files (``ParquetTable.idempotent_append``), so
+    bronze never reads a batch twice.
 
     Returns ``{"tables": {...}, "queries": {...}}`` (plus
     ``"listener"``/``"spark"`` when ``progress_log=True``); stop with

@@ -40,7 +40,7 @@ from ..queries.dedup import (
     ppjoin_prefix_len,
 )
 from .medallion import drain, foreach_writer
-from .sinks import LOG_COLUMNS, ParquetTable, exclude_batch
+from .sinks import LOG_COLUMNS, ParquetTable
 
 
 def hash_order_prefix_rows(sh_arr: DataFrame) -> DataFrame:
@@ -125,8 +125,7 @@ def exact_neardup_batch(
         cand = cand.transform(pin)
 
         if docs_table.exists():
-            hist = docs_table.read(spark)
-            prior = exclude_batch(hist, batch_id, docs_table.path)
+            prior = docs_table.read(spark, up_to_batch=batch_id - 1)
             corpus = prior.drop(*LOG_COLUMNS).unionByName(
                 batch_df, allowMissingColumns=True
             )

@@ -9,9 +9,9 @@ contract on a parquet directory:
   reads use mergeSchema so the table union-widens (v1 rows read NULL for
   v2-only columns — exactly Delta's mergeSchema semantics for our case);
 * idempotent foreachBatch appends -> each (batch_id, partition_key)
-  lands in a deterministic subdirectory written with overwrite, so a
-  replayed micro-batch overwrites itself instead of double-appending
-  (the parquet stand-in for Delta's txnAppId/txnVersion — SURVEY T7);
+  lands in a deterministic token subdirectory, so a replayed micro-batch
+  lands once instead of double-appending (the parquet stand-in for
+  Delta's txnAppId/txnVersion — SURVEY T7);
 * batch & streaming reads of the same table.
 
 On a Delta-enabled cluster the class upgrades ITSELF: every entry point
@@ -90,31 +90,16 @@ def parse_txn_token(token: str) -> tuple[str, int]:
     return ("/".join(app_bits) or "default", version)
 
 
-def batch_id_col(df: DataFrame) -> F.Column:
-    """The batch-id column of a token-appended relation, uniform across
-    storage modes. The parquet stand-in surfaces the replay token
-    directory as a ``batchid`` partition column (filters on it
-    partition-prune), so prefer it; Delta mode writes no token
-    directories (idempotence lives in txnAppId/txnVersion), so stages
-    that replay-filter must have written an explicit ``_batch_id`` data
-    column and we fall back to that. Raising (not silently matching
-    nothing) on neither keeps replay-exclusion bugs loud."""
-    if "batchid" in df.columns:
-        return F.col("batchid")
-    if "_batch_id" in df.columns:
-        return F.col("_batch_id")
-    raise ValueError(
-        "relation carries neither a batchid partition column nor a "
-        "_batch_id data column; replay filtering needs one of them "
-        "(write the stage's rows with .withColumn('_batch_id', ...))"
-    )
-
-
 # The bookkeeping columns a replay log carries beside its payload: the
 # ``_batch_id`` stamp and the token directories ``append_batch`` writes
 # (``batchid``/``role`` surface as partition columns on read). Folds
 # that hand a log's rows back as payload drop exactly these.
 LOG_COLUMNS = ("_batch_id", "batchid", "role")
+
+# The ``_batch_id`` of a row written before the stamp existed. No real
+# micro-batch uses it, so ``read(up_to_batch=)`` counts it, like a NULL
+# stamp, as prior to every batch; ``backfill_batch_column`` writes it.
+UNSTAMPED_BATCH_ID = -1
 
 
 def swap_dir(live: str, staging: str | None) -> None:
@@ -142,52 +127,6 @@ def batch_token(batch_id: int, role: str) -> str:
     ``append_batch`` writes under, surfacing as the ``batchid`` and
     ``role`` partition columns on read."""
     return f"batchid={batch_id}/role={role}"
-
-
-_warned_legacy_batch_tables: set[str] = set()
-
-
-def exclude_batch(
-    df: DataFrame, batch_id: int, table_path: str | None = None
-) -> DataFrame:
-    """Rows from strictly OTHER batches than ``batch_id`` — the replay
-    exclusion, uniform across storage modes AND table generations:
-
-    * parquet mode: partition-pruned on the ``batchid`` directory;
-    * Delta mode: the explicit ``_batch_id`` data column;
-    * rows with a NULL batch id (legacy rows written before the column
-      existed, surfaced through mergeSchema) are PRIOR by construction,
-      so the predicate is null-safe — a plain ``!=`` would silently
-      drop them from the prior set;
-    * a legacy table with NEITHER column cannot contain any
-      current-release rows, hence none from ``batch_id``: the exclusion
-      degrades to an exact no-op instead of crashing the first
-      replay-filtered read after an upgrade. A one-time loud warning
-      names the invariant; backfilling ``_batch_id`` once silences it.
-    """
-    try:
-        col = batch_id_col(df)
-    except ValueError:
-        # one warning per degraded TABLE, not per process: a second
-        # legacy table must surface too, or its treat-all-rows-as-prior
-        # degradation is silent. Unidentified callers warn every time
-        # (loud beats silent for a degraded exactness guarantee).
-        if table_path is None or table_path not in _warned_legacy_batch_tables:
-            if table_path is not None:
-                _warned_legacy_batch_tables.add(table_path)
-            import warnings
-
-            warnings.warn(
-                f"replay exclusion ({table_path or 'unidentified table'}): "
-                "table has neither batchid nor "
-                "_batch_id (written by a pre-_batch_id release?). "
-                "Treating ALL rows as prior — exact only while no "
-                "current-release batch has written here; backfill "
-                "_batch_id once to restore column-based exclusion.",
-                stacklevel=2,
-            )
-        return df
-    return df.where(~col.eqNullSafe(F.lit(batch_id)))
 
 
 class ParquetTable:
@@ -277,10 +216,25 @@ class ParquetTable:
 
     def idempotent_append(self, df: DataFrame, token: str) -> None:
         """Append keyed by a replay token (e.g. 'batchid=7/schemaid=2'):
-        a re-run with the same token overwrites its own output. Delta
-        mode maps the token to txnAppId/txnVersion, whose log-level
-        dedup is the real transactional form of the same contract."""
+        a re-run with the same token writes nothing once the earlier
+        write committed (its ``_SUCCESS`` marker is present), and
+        overwrites a partial one. Keeping the committed files keeps
+        their names, so a file stream reading this table (bronze reads
+        raw) never sees a replayed batch as new files. Delta mode maps
+        the token to txnAppId/txnVersion, whose log-level dedup is the
+        real transactional form of the same contract. ``append_batch``
+        still differs from Delta on replays: in parquet mode it replaces
+        a committed token."""
         self._recover_swap()
+        if not self._delta(df.sparkSession) and os.path.exists(
+            os.path.join(self.path, token, "_SUCCESS")
+        ):
+            return
+        self._write_token(df, token)
+
+    def _write_token(self, df: DataFrame, token: str) -> None:
+        """Write ``df`` as the token's output: a Delta txn append, or an
+        overwrite of the token directory."""
         if self._delta(df.sparkSession):
             app_id, version = parse_txn_token(token)
             self._delta_write(
@@ -301,12 +255,14 @@ class ParquetTable:
     ) -> None:
         """The replay-log append every foreachBatch stage shares: stamp
         the rows with ``_batch_id`` and write them under the
-        ``batchid=N/role=R`` token, so a replayed (batch, role)
-        overwrites its own directory instead of double-counting, and
-        ``read(up_to_batch=)`` serves any as-of-batch view of the log.
-        The stamp is the plain IntegerType literal
-        ``backfill_batch_column`` matches."""
-        self.idempotent_append(
+        ``batchid=N/role=R`` token, so ``read(up_to_batch=)`` serves any
+        as-of-batch view of the log. In parquet mode a replayed (batch,
+        role) replaces its token's files, committed or not (latest
+        wins); ``idempotent_append`` and Delta's txnVersion keep the
+        first committed write instead. The stamp is a plain IntegerType
+        literal, the type ``backfill_batch_column`` writes."""
+        self._recover_swap()
+        self._write_token(
             df.withColumn("_batch_id", F.lit(batch_id)),
             batch_token(batch_id, role),
         )
@@ -344,28 +300,26 @@ class ParquetTable:
             return
         self._staged_swap_write(df)
 
-    def backfill_batch_column(
-        self, spark: SparkSession, batch_id: int = -1
-    ) -> int:
-        """The remediation exclude_batch's legacy warning names: stamp
-        every row that carries NO batch id with an explicit
-        ``_batch_id`` (default -1 — a value no real micro-batch uses,
-        so the rows stay PRIOR under replay exclusion exactly as the
-        degraded path treated them, but now via the column predicate).
-        One atomic staged-swap rewrite; idempotent (a second run finds
-        nothing null). Returns rows stamped."""
+    def backfill_batch_column(self, spark: SparkSession) -> int:
+        """The remedy ``read(up_to_batch=)`` names for a table without a
+        ``_batch_id`` column: stamp every row that carries no batch id
+        with ``UNSTAMPED_BATCH_ID``, so the rows stay prior to every
+        batch. One atomic staged-swap rewrite; idempotent (a second run
+        finds nothing null). A token-partitioned table is left alone:
+        the flat rewrite would lose its token directories. Returns rows
+        stamped."""
         self._recover_swap()
         if not self.exists():
             return 0
         cur = self.read(spark)
         if "batchid" in cur.columns:
-            return 0  # token-partitioned table: already replay-exact
+            return 0
         if "_batch_id" not in cur.columns:
             stamped = cur.count()
             # plain int literal: the stages write _batch_id as
             # F.lit(batch_id) (IntegerType), and a wider stamp would
             # break parquet schema merging against stage-written files
-            out = cur.withColumn("_batch_id", F.lit(batch_id))
+            out = cur.withColumn("_batch_id", F.lit(UNSTAMPED_BATCH_ID))
         else:
             stamped = cur.where(F.col("_batch_id").isNull()).count()
             if stamped == 0:
@@ -374,7 +328,8 @@ class ParquetTable:
             out = cur.withColumn(
                 "_batch_id",
                 F.coalesce(
-                    F.col("_batch_id"), F.lit(batch_id).cast(existing_t)
+                    F.col("_batch_id"),
+                    F.lit(UNSTAMPED_BATCH_ID).cast(existing_t),
                 ),
             )
         if self._delta(spark):
@@ -494,10 +449,12 @@ class ParquetTable:
     ) -> DataFrame:
         """The whole table; with ``up_to_batch``, only the rows stamped
         by batches <= ``up_to_batch`` (the as-of / prequential view of a
-        replay log — ``up_to_batch=batch_id - 1`` is the strictly-older
-        probe a replayed batch needs, so it never sees its own
-        half-written rows). Unstamped (NULL ``_batch_id``) rows are not
-        in any as-of view."""
+        replay log). ``up_to_batch=batch_id - 1`` is the one replay
+        exclusion: the strictly-older rows a replayed batch may see, so
+        it never sees its own half-written rows. An unstamped row (NULL
+        ``_batch_id``, surfaced through mergeSchema) is prior to every
+        batch, like ``UNSTAMPED_BATCH_ID``. A table with no ``_batch_id``
+        column at all raises: run ``backfill_batch_column`` once."""
         self._recover_swap()
         if self._delta(spark):
             df = spark.read.format("delta").load(self.path)
@@ -521,7 +478,14 @@ class ParquetTable:
                     "{'valueSchemaId': 'bigint'}) to widen in place."
                 ) from e
         if up_to_batch is not None:
-            df = df.where(F.col("_batch_id") <= up_to_batch)
+            if "_batch_id" not in df.columns:
+                raise ValueError(
+                    f"table {self.path} has no _batch_id column, so no "
+                    "as-of view; stamp it once with "
+                    "ParquetTable.backfill_batch_column"
+                )
+            stamp = F.col("_batch_id")
+            df = df.where(stamp.isNull() | (stamp <= up_to_batch))
         return df
 
     def rewrite_columns(self, spark: SparkSession, cast_map: dict[str, str]) -> None:
@@ -778,20 +742,16 @@ class ParquetTable:
                     removed.append(p)
         return {"removed": removed}
 
-    def stream(self, spark: SparkSession, max_files_per_trigger: int | None = None) -> DataFrame:
+    def stream(self, spark: SparkSession) -> DataFrame:
         """Incremental read as a stream (Delta-streaming-source stand-in,
         SURVEY S3). Schema is pinned from a batch read (the union-widened
         shape) so late-arriving columns surface as NULLs. Delta mode
         returns the real Delta streaming source (bronze.py:14-17)."""
         if self._delta(spark):
-            reader = spark.readStream.format("delta")
-            if max_files_per_trigger:
-                reader = reader.option(
-                    "maxFilesPerTrigger", str(max_files_per_trigger)
-                )
-            return reader.load(self.path)
+            return spark.readStream.format("delta").load(self.path)
         schema = self.read(spark).schema
-        reader = spark.readStream.schema(schema).option("mergeSchema", "true")
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        return reader.parquet(self.path)
+        return (
+            spark.readStream.schema(schema)
+            .option("mergeSchema", "true")
+            .parquet(self.path)
+        )

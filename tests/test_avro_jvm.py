@@ -1,12 +1,14 @@
-"""The JVM Avro decoder (``avro/AvroWireDecode.java``) against the
-pure-Python codec, its reference.
+"""Both ``decode_avro`` engines against the pure-Python codec, their
+reference: the JVM decoder (``avro/AvroWireDecode.java``) and the
+``mapInPandas`` fallback a session without the compiled class takes.
 
-Every decode here must run in the JVM: ``test_jvm_decoder_resolves``
-fails when the class did not build or load, so a silent fall-back to
-the Python path cannot pass the parity properties. Also pinned: the
-demux plan holds no Python node, a streaming ingest (whose foreachBatch
-runs on a cloned session) lands what the codec decodes, and
-``session_conf`` compiles the decoder once per cache entry.
+Each parity and malformed-payload case runs on both engines; every
+decode asserts its plan holds its engine's node, so neither can pass by
+running on the other. ``test_jvm_decoder_resolves`` fails when the class
+did not build or load. Also pinned: the demux plan holds no Python
+node, a streaming ingest (whose foreachBatch runs on a cloned session)
+lands what the codec decodes, and ``session_conf`` compiles the decoder
+once per cache entry.
 """
 
 from __future__ import annotations
@@ -14,12 +16,15 @@ from __future__ import annotations
 import json
 import os
 import re
+from contextlib import contextmanager
+from unittest import mock
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from databricks_end_to_end_streaming_spark import session
+from databricks_end_to_end_streaming_spark.avro import functions as avro_functions
 from databricks_end_to_end_streaming_spark.avro.codec import (
     decoder_for,
     encode,
@@ -148,9 +153,32 @@ def _corruptions(payload: bytes) -> list[bytes | None]:
     return [payload[: len(payload) // 2], payload + b"\x00", GARBAGE, OVERSIZED, None]
 
 
-def _jvm_decode(spark, payloads, writer, reader=None, mode="PERMISSIVE"):
+# decode_avro's two engines and the node each puts in the plan
+ENGINE_NODE = {"jvm": "UDF(", "python": "MapInPandas"}
+# what a FAILFAST decode of a malformed payload raises on each engine
+ENGINE_FAILURE = {
+    "jvm": "FAILED_EXECUTE_UDF",
+    "python": "thrown from the Python worker",
+}
+
+
+@contextmanager
+def _engine(engine):
+    """decode_avro on ``engine``: "python" hides the JVM class, as on a
+    session built without javac."""
+    if engine == "jvm":
+        yield
+        return
+    with mock.patch.object(avro_functions, "_jvm_decoder", lambda spark: None):
+        yield
+
+
+def _decode(spark, payloads, writer, reader=None, mode="PERMISSIVE", engine="jvm"):
     df = spark.createDataFrame([(p,) for p in payloads], "payload binary")
-    out = decode_avro(df, "payload", writer, mode=mode, reader_schema_json=reader)
+    with _engine(engine):
+        out = decode_avro(df, "payload", writer, mode=mode, reader_schema_json=reader)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert ENGINE_NODE[engine] in plan, plan
     return [
         None if r.parsedValue is None else r.parsedValue.asDict(recursive=True)
         for r in out.collect()
@@ -165,9 +193,10 @@ def _python_rejects(read, payload) -> bool:
     return False
 
 
-def _check_parity(spark, records, writer, reader=None):
-    """JVM decode of ``records`` plus the corruptions of the first one ==
-    the codec's decode, and all-null structs for the corruptions."""
+def _check_parity(spark, records, writer, reader=None, engine="jvm"):
+    """The ``engine``'s decode of ``records`` plus the corruptions of the
+    first one == the codec's decode, and all-null structs for the
+    corruptions."""
     if reader is None:
         read = decoder_for(writer)
         names = [f.name for f in parse_schema(writer).fields]
@@ -177,9 +206,43 @@ def _check_parity(spark, records, writer, reader=None):
     payloads = [encode(r, writer) for r in records]
     bad = _corruptions(payloads[0])
     assert all(_python_rejects(read, p) for p in bad)
-    got = _jvm_decode(spark, payloads + bad, writer, reader)
+    got = _decode(spark, payloads + bad, writer, reader, engine=engine)
     assert got[: len(payloads)] == [read(p) for p in payloads]
     assert got[len(payloads) :] == [dict.fromkeys(names)] * len(bad)
+
+
+# (record-list strategy, writer schema, reader schema, examples) per
+# parity case
+PARITY = {
+    "all_types": (
+        st.lists(ALL_TYPES_RECORDS, min_size=1, max_size=20), ALL_TYPES, None, 25
+    ),
+    "product_v1": (
+        st.lists(PRODUCT_RECORDS, min_size=1, max_size=30), PRODUCT_V1_JSON, None, 15
+    ),
+    "product_v2": (
+        st.lists(PRODUCT_V2_RECORDS, min_size=1, max_size=30), PRODUCT_V2_JSON, None, 15
+    ),
+    # Avro's own resolution fills the v2-only fields with the reader's
+    # defaults, as reader_for does
+    "v1_to_v2_reader": (
+        st.lists(PRODUCT_RECORDS, min_size=1, max_size=30),
+        PRODUCT_V1_JSON,
+        PRODUCT_V2_JSON,
+        15,
+    ),
+}
+
+
+def _parity_property(spark, case, engine):
+    batches, writer, reader, examples = PARITY[case]
+
+    @settings(max_examples=examples, deadline=None)
+    @given(batches)
+    def check(batch):
+        _check_parity(spark, batch, writer, reader, engine)
+
+    check()
 
 
 def test_jvm_decoder_resolves(spark):
@@ -192,42 +255,48 @@ def test_jvm_decoder_resolves(spark):
     assert "UDF(" in plan and "MapInPandas" not in plan
 
 
-@settings(max_examples=25, deadline=None)
-@given(st.lists(ALL_TYPES_RECORDS, min_size=1, max_size=20))
-def test_jvm_matches_codec_all_types(spark, records):
-    _check_parity(spark, records, ALL_TYPES)
+def test_jvm_matches_codec_all_types(spark):
+    _parity_property(spark, "all_types", "jvm")
 
 
-@settings(max_examples=15, deadline=None)
-@given(st.lists(PRODUCT_RECORDS, min_size=1, max_size=30))
-def test_jvm_matches_codec_product_v1(spark, records):
-    _check_parity(spark, records, PRODUCT_V1_JSON)
+def test_jvm_matches_codec_product_v1(spark):
+    _parity_property(spark, "product_v1", "jvm")
 
 
-@settings(max_examples=15, deadline=None)
-@given(st.lists(PRODUCT_V2_RECORDS, min_size=1, max_size=30))
-def test_jvm_matches_codec_product_v2(spark, records):
-    _check_parity(spark, records, PRODUCT_V2_JSON)
+def test_jvm_matches_codec_product_v2(spark):
+    _parity_property(spark, "product_v2", "jvm")
 
 
-@settings(max_examples=15, deadline=None)
-@given(st.lists(PRODUCT_RECORDS, min_size=1, max_size=30))
-def test_jvm_resolves_v1_writer_to_v2_reader(spark, records):
-    """Avro's own resolution fills the v2-only fields with the reader's
-    defaults, as reader_for does."""
-    _check_parity(spark, records, PRODUCT_V1_JSON, PRODUCT_V2_JSON)
+def test_jvm_resolves_v1_writer_to_v2_reader(spark):
+    _parity_property(spark, "v1_to_v2_reader", "jvm")
 
 
-@pytest.mark.parametrize("kind", CORRUPTIONS)
-def test_jvm_failfast_raises_on_malformed(spark, kind):
+@pytest.mark.parametrize("case", PARITY)
+def test_python_fallback_matches_codec(spark, case):
+    _parity_property(spark, case, "python")
+
+
+def _check_failfast(spark, kind, engine):
     good = encode(
         {"productId": "p", "eventId": "e", "type": "t", "timestamp": 7},
         PRODUCT_V1_JSON,
     )
     bad = dict(zip(CORRUPTIONS, _corruptions(good)))
-    assert _jvm_decode(spark, [good], PRODUCT_V1_JSON, mode="FAILFAST")[0]
-    with pytest.raises(Exception, match="FAILED_EXECUTE_UDF"):
-        _jvm_decode(spark, [good, bad[kind]], PRODUCT_V1_JSON, mode="FAILFAST")
+    assert _decode(spark, [good], PRODUCT_V1_JSON, mode="FAILFAST", engine=engine)[0]
+    with pytest.raises(Exception, match=ENGINE_FAILURE[engine]):
+        _decode(
+            spark, [good, bad[kind]], PRODUCT_V1_JSON, mode="FAILFAST", engine=engine
+        )
+
+
+@pytest.mark.parametrize("kind", CORRUPTIONS)
+def test_jvm_failfast_raises_on_malformed(spark, kind):
+    _check_failfast(spark, kind, "jvm")
+
+
+@pytest.mark.parametrize("kind", CORRUPTIONS)
+def test_python_fallback_failfast_raises_on_malformed(spark, kind):
+    _check_failfast(spark, kind, "python")
 
 
 PYTHON_NODE = re.compile(r"MapInPandas|\w*Python\w*|ArrowEval")

@@ -1,5 +1,6 @@
 """Property-based tests (hypothesis) for the pure-Python Avro codec —
-the binary-compatibility fallback used when no spark-avro jar resolves.
+the reference the JVM decoder is tested against, and the fallback
+decode_avro takes when the JVM decoder class does not resolve.
 Roundtrip over the full supported type lattice (primitives, nullable
 unions, arrays, maps, enums, nested records) plus zigzag-varint edge
 cases. No SparkSession needed: these exercise the scalar codec that

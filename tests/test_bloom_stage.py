@@ -158,75 +158,54 @@ def test_stale_bitmap_recovery(spark, workdir):
     assert 301 not in ids and 300 in ids
 
 
-def test_exclude_batch_legacy_and_null_rows(spark, workdir):
-    """Replay exclusion across table generations (ADVICE r5): a legacy
-    table with NO batch column degrades to an exact no-op (one-time
-    warning) instead of crashing; NULL-batch rows surfaced through
-    mergeSchema count as PRIOR (null-safe predicate), not dropped."""
-    import warnings
+def test_as_of_read_legacy_and_null_rows(spark, workdir):
+    """Replay exclusion across table generations: NULL-batch rows
+    surfaced through mergeSchema count as PRIOR to every batch, and a
+    legacy table with NO _batch_id column raises, naming the remedy,
+    instead of guessing which rows are prior."""
+    import pytest
 
-    from databricks_end_to_end_streaming_spark.streaming import sinks
-    from databricks_end_to_end_streaming_spark.streaming.sinks import (
-        exclude_batch,
+    legacy = ParquetTable(f"{workdir}/legacy")
+    legacy.append(
+        spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, fp string")
     )
+    with pytest.raises(ValueError, match="backfill_batch_column"):
+        legacy.read(spark, up_to_batch=6)
 
-    legacy = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, fp string")
-    sinks._warned_legacy_batch_tables.clear()
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        out = exclude_batch(legacy, batch_id=7, table_path="/tmp/t1")
-        assert out.count() == 2  # nothing excluded, nothing raised
-        assert any("backfill" in str(x.message) for x in w)
-        # a SECOND degraded table warns too (ADVICE r6: warn-once is
-        # keyed per table path, not per process) ...
-        exclude_batch(legacy, batch_id=7, table_path="/tmp/t2")
-        # ... while a repeat of an already-warned table stays quiet
-        exclude_batch(legacy, batch_id=7, table_path="/tmp/t1")
-        paths = [str(x.message) for x in w if "backfill" in str(x.message)]
-        assert len(paths) == 2
-        assert any("/tmp/t2" in m for m in paths)
-
-    mixed = spark.createDataFrame(
-        [(1, None), (2, 7), (3, 3)], "doc_id long, _batch_id long"
+    mixed = ParquetTable(f"{workdir}/mixed")
+    mixed.append(
+        spark.createDataFrame(
+            [(1, None), (2, 7), (3, 3)], "doc_id long, _batch_id long"
+        )
     )
-    kept = {r.doc_id for r in exclude_batch(mixed, batch_id=7).collect()}
+    kept = {r.doc_id for r in mixed.read(spark, up_to_batch=7 - 1).collect()}
     assert kept == {1, 3}  # null row is prior; own batch excluded
 
 
 def test_backfill_batch_column_restores_exact_exclusion(spark, workdir):
-    """The remediation the legacy warning names: stamping _batch_id=-1
-    converts the degraded treat-all-as-prior table into a column-
-    excluded one (no more warning), keeps every legacy row PRIOR, and
-    is idempotent."""
-    import warnings
-
+    """The remedy the as-of read names: stamping _batch_id=-1 makes a
+    column-less legacy table readable as of any batch, keeps every
+    legacy row PRIOR, and is idempotent."""
+    import pytest
     import pyspark.sql.functions as F
-
-    from databricks_end_to_end_streaming_spark.streaming import sinks
-    from databricks_end_to_end_streaming_spark.streaming.sinks import (
-        exclude_batch,
-    )
 
     t = ParquetTable(f"{workdir}/legacy")
     t.append(
         spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, fp string")
     )
+    with pytest.raises(ValueError, match="backfill_batch_column"):
+        t.read(spark, up_to_batch=6)
     assert t.backfill_batch_column(spark) == 2
     assert t.backfill_batch_column(spark) == 0  # idempotent
-
-    sinks._warned_legacy_batch_tables.clear()
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        out = exclude_batch(t.read(spark), batch_id=7, table_path=t.path)
-        assert out.count() == 2  # legacy rows stay prior
-        assert not any("backfill" in str(x.message) for x in w)  # silenced
+    assert t.read(spark, up_to_batch=6).count() == 2  # legacy rows stay prior
     # new-release rows now exclude exactly
     t.append(
         spark.createDataFrame([(3, "c")], "doc_id long, fp string").withColumn(
             "_batch_id", F.lit(7)
         )
     )
-    assert exclude_batch(t.read(spark), batch_id=7, table_path=t.path).count() == 2
+    assert t.read(spark, up_to_batch=7 - 1).count() == 2
+    assert t.read(spark, up_to_batch=7).count() == 3
     # mixed table: only the null rows get stamped
     t2 = ParquetTable(f"{workdir}/mixed")
     t2.append(
